@@ -46,10 +46,11 @@ TABLES = (
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain parquet scan — pushdown/pruning apply.
 
-    Nanosecond-precision parquet timestamps (the ``events.ts`` column) are
-    not a legal Spark type; they're read as raw int64 nanos
-    (``nanosAsLong``) and converted to microsecond timestamps — the same
-    truncation every µs-native engine (DuckDB, Spark) applies.
+    Nanosecond-precision parquet timestamps are not a legal Spark type;
+    when the footer has one, the file is read with ``nanosAsLong`` (raw
+    int64 nanos) and those columns are converted to microsecond
+    timestamps — the same truncation every µs-native engine (DuckDB,
+    Spark) applies.
 
     Microsecond parquet timestamps with ``isAdjustedToUTC=false`` are
     inferred by Spark as ``TIMESTAMP_NTZ`` — a type that breaks
@@ -60,12 +61,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     every operator on a single timestamp type.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
     ns_cols = _nanos_columns(path)
+    if ns_cols:
+        # session-global, so set only when the footer needs it
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
     for c in ns_cols:
         if isinstance(df.schema[c].dataType, T.LongType):
             # integer div (not `/`): int64 nanos overflow double's 53-bit mantissa

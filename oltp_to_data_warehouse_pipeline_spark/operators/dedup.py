@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from oltp_to_data_warehouse_pipeline_spark.operators.bounded import collect_bounded
 from oltp_to_data_warehouse_pipeline_spark.util import ensure_min_parallelism
 
 
@@ -371,7 +372,6 @@ def connected_components(
     a: str = "doc_a",
     b: str = "doc_b",
     max_iter: int = 25,
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Cluster near-dup pairs into components: (node, cluster_id) where
     cluster_id = min node id reachable through the pair graph.
@@ -394,20 +394,18 @@ def connected_components(
     set is usually orders of magnitude smaller than the corpus (it IS
     the duplication mass), and each distributed round costs several
     jobs' fixed overhead regardless of size — measured 4.6 s for a
-    920-edge graph at sf0.1 vs ~0.1 s in the driver.  The gate is the
-    broadcast-join trade: ``driver_max_edges`` bounds what the driver
-    may hold (the same sanctioned-bounded-collect posture as centroids /
-    LSH seeds); graphs past the bound take the distributed loop
-    unchanged.  Both paths produce the identical (node, min-reachable-id)
-    relation — tests/test_dedup.py property-checks them against each
-    other.
+    920-edge graph at sf0.1 vs ~0.1 s in the driver.  The distinct edge
+    set is collected under the shared driver bound
+    (:func:`operators.bounded.collect_bounded`); graphs past the bound
+    are pinned and take the distributed loop unchanged.  Both paths
+    produce the identical (node, min-reachable-id) relation —
+    tests/test_dedup.py property-checks them against each other.
     """
     sym = pairs.select(F.col(a).alias("s"), F.col(b).alias("d")).union(
         pairs.select(F.col(b).alias("s"), F.col(a).alias("d"))
     )
-    edges = sym.distinct().localCheckpoint(eager=True)
-    n_edges = edges.count()  # over the checkpointed blocks: no recompute
-    if n_edges <= driver_max_edges:
+    edge_rows = collect_bounded(sym.distinct())
+    if edge_rows is not None:
         parent: dict = {}
 
         def find(x):
@@ -418,7 +416,7 @@ def connected_components(
             return x
 
         has_null = False
-        for s, d in edges.collect():
+        for s, d in edge_rows:
             if s is None or d is None:
                 # parity with the distributed loop: a NULL endpoint never
                 # matches a join key, so it neither receives nor donates
@@ -438,11 +436,12 @@ def connected_components(
         spark = pairs.sparkSession
         from pyspark.sql import types as T
 
-        node_t = edges.schema["s"].dataType
+        node_t = sym.schema["s"].dataType
         schema = T.StructType(
             [T.StructField("node", node_t), T.StructField("lbl", node_t)]
         )
         return spark.createDataFrame(rows, schema)
+    edges = sym.distinct().localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("s").alias("node")).distinct().withColumn("lbl", F.col("node"))
     ).localCheckpoint(eager=True)

@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from oltp_to_data_warehouse_pipeline_spark.operators.bounded import collect_bounded
 from oltp_to_data_warehouse_pipeline_spark.util import md5_fold48
 
 HASH_SPACE = 1 << 48  # md5_fold48 range: [0, 2^48)
@@ -91,47 +92,17 @@ def kmv_hash(key: Column | str) -> Column:
     return md5_fold48(key, "kmv|")
 
 
-def is_driver_materialized(df: DataFrame) -> bool:
-    """True when a sketch DataFrame was produced by the bounded driver
-    path (a local relation: already materialized, nothing upstream to
-    pin).  Callers that would otherwise ``localCheckpoint`` the sketch
-    can skip the redundant pin job."""
-    return bool(getattr(df, "_sketch_driver_materialized", False))
-
-
-def driver_rows(df: DataFrame) -> list | None:
-    """The sketch's rows as held by the driver path (list of tuples in
-    the DataFrame's column order), or None for a distributed sketch.
-    Lets a bounded consumer (e.g. the intersect estimator) compute
-    driver-side without re-collecting the local relation (a ``collect``
-    on a parallelized local relation still launches a job)."""
-    return getattr(df, "_sketch_local_rows", None)
-
-
-def _mark_driver_materialized(df: DataFrame, rows: list) -> DataFrame:
-    df._sketch_driver_materialized = True  # type: ignore[attr-defined]
-    df._sketch_local_rows = rows  # type: ignore[attr-defined]
-    return df
-
-
-def _kmv_driver_sketch(
-    df: DataFrame,
-    key: str,
-    group_cols: list[str],
-    k: int,
-    max_rows: int,
-) -> DataFrame | None:
-    """Bounded driver path for :func:`kmv_sketch` — the round-12 follow-up
-    to the round-11 checkpoint audit: each eager ``localCheckpoint`` pin
-    costs ~0.5 s of fixed job overhead at sf0.1, and for a sketch whose
-    intermediates are ≤ max_rows BY CONSTRUCTION the cheaper barrier is a
-    driver collect (guide §5: bounded driver work; the
-    ``connected_components`` ``driver_max_edges`` precedent).  Returns the
-    finished ≤ k-rows-per-group sketch as a LOCAL relation (no further
-    jobs to consume it, broadcast-sized for any downstream join), or
-    ``None`` when an intermediate exceeds ``max_rows`` — the caller then
-    takes the distributed path unchanged (no silent cliff; the two wasted
-    sizing jobs are the documented fallback cost).
+def kmv_sketch_rows(
+    df: DataFrame, key: str, group_cols: list[str], k: int = 64
+) -> list[tuple] | None:
+    """Bounded driver path of :func:`kmv_sketch` (``prefilter=True``): the
+    same ≤ k-rows-per-group sketch as ``(group…, h)`` tuples, or None when
+    any of its collects exceeds the shared driver bound
+    (:func:`operators.bounded.collect_bounded`) — the caller then builds
+    the distributed sketch.  Each eager ``localCheckpoint`` pin of the
+    distributed build costs ~0.5 s of fixed job overhead at sf0.1, while
+    for bounded group sets every intermediate here is a few rows per
+    group, so collects are the cheaper barriers.
 
     Step-for-step parity with the distributed formulation (each step is
     the same relation, so the output is bit-identical by construction):
@@ -140,9 +111,8 @@ def _kmv_driver_sketch(
     audit = active groups with < k survivors (zero-survivor active groups
     INCLUDED — they are absent from the survivor dict and default to 0);
     rescued = per-audit-group distinct raw hashes, ranked ≤ k
-    distributed-side so the driver never holds an unbounded rescue set;
-    final = per-group k smallest over kept ∪ rescued (disjoint by group,
-    so per-branch ranking equals the union rank).
+    distributed-side; final = per-group k smallest over kept ∪ rescued
+    (disjoint by group, so per-branch ranking equals the union rank).
     """
     g = [F.col(c) for c in group_cols]
     spark = df.sparkSession
@@ -158,8 +128,8 @@ def _kmv_driver_sketch(
             .alias("__t"),
         )
     )
-    trows = active.limit(max_rows + 1).collect()
-    if len(trows) > max_rows:
+    trows = collect_bounded(active)
+    if trows is None:
         return None
     raw = df.where(F.col(key).isNotNull()).select(*g, kmv_hash(key).alias("h"))
     if trows:
@@ -172,8 +142,8 @@ def _kmv_driver_sketch(
         )
     else:
         survivors = raw.distinct()
-    srows = survivors.limit(max_rows + 1).collect()
-    if len(srows) > max_rows:
+    srows = collect_bounded(survivors)
+    if srows is None:
         return None
     ng = len(group_cols)
     surv: dict[tuple, list] = {}
@@ -187,7 +157,7 @@ def _kmv_driver_sketch(
             audit, active.select(*group_cols).schema
         )
         w = Window.partitionBy(*group_cols).orderBy("h")
-        resc = (
+        resc = collect_bounded(
             _ns_join(raw, F.broadcast(la), group_cols, "left_semi")
             .select(*group_cols, "h")
             .distinct()
@@ -195,16 +165,15 @@ def _kmv_driver_sketch(
             .where(F.col("__r") <= k)
             .select(*group_cols, "h")
         )
-        out_rows.extend(tuple(r) for r in resc.collect())
+        if resc is None:
+            return None
+        out_rows.extend(tuple(r) for r in resc)
         for gk in audit:
             surv.pop(gk, None)
     for gk, hs in surv.items():
         hs.sort()
         out_rows.extend(gk + (h,) for h in hs[:k])
-    schema = raw.schema
-    return _mark_driver_materialized(
-        spark.createDataFrame(out_rows, schema), out_rows
-    )
+    return out_rows
 
 
 def kmv_sketch(
@@ -214,7 +183,6 @@ def kmv_sketch(
     k: int = 64,
     prefilter: bool = True,
     pin: bool = True,
-    driver_max_rows: int | None = None,
     bounded_groups: bool = True,
 ) -> DataFrame:
     """``(group…, h)`` — the ≤ k smallest distinct key hashes per group.
@@ -232,16 +200,9 @@ def kmv_sketch(
     cache (e.g. sketches per user over 10⁹ users), where recomputation —
     or a caller-owned persist — is the right trade.
 
-    ``driver_max_rows`` (opt-in; None = off) engages the bounded DRIVER
-    path when the prefilter intermediates fit under the bound
-    (:func:`_kmv_driver_sketch`): the checkpoint pins' per-job overhead
-    disappears and the finished sketch comes back as a local relation
-    (check :func:`is_driver_materialized` before re-pinning it).  Size
-    the bound like ``connected_components.driver_max_edges``: the collect
-    holds ≤ max_rows narrow tuples on the driver (~100 B each — 100k rows
-    ≈ 10 MB).  Callers whose group count is unbounded (per-user sketches)
-    must leave it None; past the bound the function falls back to the
-    distributed path at the cost of the two wasted sizing jobs.
+    The distributed build always runs here; callers with a bounded group
+    set try :func:`kmv_sketch_rows` first, which returns the same sketch
+    as driver-held rows when it fits the shared driver bound.
 
     ``bounded_groups`` gates the distributed path's broadcast hints on
     the GROUP-cardinality-bounded relations (thresholds, survivor counts,
@@ -254,10 +215,6 @@ def kmv_sketch(
     estimates (shuffle join on checkpoint-derived inputs).
     """
     g = [F.col(c) for c in group_cols]
-    if prefilter and driver_max_rows is not None:
-        local = _kmv_driver_sketch(df, key, group_cols, k, driver_max_rows)
-        if local is not None:
-            return local
     bhint = F.broadcast if bounded_groups else (lambda d: d)
     raw = df.where(F.col(key).isNotNull()).select(*g, kmv_hash(key).alias("h"))
     if prefilter:

@@ -59,6 +59,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from oltp_to_data_warehouse_pipeline_spark.operators.bounded import collect_bounded
 from oltp_to_data_warehouse_pipeline_spark.operators.kmv import HASH_SPACE, _ns_join
 from oltp_to_data_warehouse_pipeline_spark.util import md5_fold48
 
@@ -79,23 +80,24 @@ def _bottom_k(rows: DataFrame, group_cols: list[str], k: int) -> DataFrame:
     )
 
 
-def _qs_driver_sketch(
+def qsample_sketch_rows(
     df: DataFrame,
     key_col: str,
     value_col: str,
     group_cols: list[str],
-    k: int,
-    max_rows: int,
-):
-    """Bounded driver path for :func:`qsample_sketch` — the quantile twin
-    of ``kmv._kmv_driver_sketch`` (see its docstring for the job-floor
-    rationale and the fallback contract).  Unlike the KMV twin, the
-    survivor stream here is ~SAFETY·k ROWS per group (not distinct
-    hashes), so collecting it whole measured ~4× the bytes of the final
-    sketch; instead the collect job carries the rank window the consumer
-    would pay anyway and ships only ``__r ≤ k`` rows plus a per-group
-    survivor COUNT for the audit (round-12 profile: 1.3 s → ~1.0 s for
-    the collect job, and the driver does no sorting at all).
+    k: int = 256,
+) -> list[tuple] | None:
+    """Bounded driver path of :func:`qsample_sketch` (``prefilter=True``):
+    the same sketch as ``(group…, h, v)`` tuples, or None when any of its
+    collects exceeds the shared driver bound — the quantile twin of
+    :func:`operators.kmv.kmv_sketch_rows` (see its docstring for the
+    job-floor rationale).  Unlike the KMV twin, the survivor stream here
+    is ~SAFETY·k ROWS per group (not distinct hashes), so collecting it
+    whole measured ~4× the bytes of the final sketch; instead the collect
+    job carries the rank window the consumer would pay anyway and ships
+    only ``__r ≤ k`` rows plus a per-group survivor COUNT for the audit
+    (round-12 profile: 1.3 s → ~1.0 s for the collect job, and the driver
+    does no sorting at all).
 
     Parity argument per step: active thresholds = the ``__n > SAFETY·k``
     rows of the exact sizer; survivors = raw rows with ``h < t``
@@ -105,11 +107,7 @@ def _qs_driver_sketch(
     absent from ``ranked`` and default to 0); final = ranked rows of
     non-audit groups + audit groups' raw rows ranked ≤ k — kept and
     rescued groups are disjoint, so per-branch ranking equals the
-    distributed union rank.  Returns None past the bound."""
-    from oltp_to_data_warehouse_pipeline_spark.operators.kmv import (
-        _mark_driver_materialized,
-    )
-
+    distributed union rank."""
     g = [F.col(c) for c in group_cols]
     spark = df.sparkSession
     ok = F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
@@ -125,8 +123,8 @@ def _qs_driver_sketch(
             .alias("__t"),
         )
     )
-    trows = active.limit(max_rows + 1).collect()
-    if len(trows) > max_rows:
+    trows = collect_bounded(active)
+    if trows is None:
         return None
     raw = df.where(ok).select(
         *g, qs_hash(key_col).alias("h"), F.col(value_col).alias("v")
@@ -147,8 +145,8 @@ def _qs_driver_sketch(
         .withColumn("__cnt", F.count(F.lit(1)).over(wc))
         .where(F.col("__r") <= k)
     )
-    srows = ranked.limit(max_rows + 1).collect()
-    if len(srows) > max_rows:
+    srows = collect_bounded(ranked)
+    if srows is None:
         return None
     ng = len(group_cols)
     surv: dict[tuple, list] = {}
@@ -162,21 +160,23 @@ def _qs_driver_sketch(
     out_rows: list[tuple] = []
     if audit:
         la = spark.createDataFrame(audit, active.select(*group_cols).schema)
-        resc = _bottom_k(
-            _ns_join(raw, F.broadcast(la), group_cols, "left_semi").select(
-                *group_cols, "h", "v"
-            ),
-            group_cols,
-            k,
+        resc = collect_bounded(
+            _bottom_k(
+                _ns_join(raw, F.broadcast(la), group_cols, "left_semi").select(
+                    *group_cols, "h", "v"
+                ),
+                group_cols,
+                k,
+            )
         )
-        out_rows.extend(tuple(r) for r in resc.collect())
+        if resc is None:
+            return None
+        out_rows.extend(tuple(r) for r in resc)
         for gk in audit:
             surv.pop(gk, None)
     for rows in surv.values():
         out_rows.extend(rows)
-    return _mark_driver_materialized(
-        spark.createDataFrame(out_rows, raw.schema), out_rows
-    )
+    return out_rows
 
 
 def qsample_sketch(
@@ -187,7 +187,6 @@ def qsample_sketch(
     k: int = 256,
     prefilter: bool = True,
     pin: bool = True,
-    driver_max_rows: int | None = None,
     bounded_groups: bool = True,
 ) -> DataFrame:
     """Build per-group bottom-k row samples: ``group_cols + (h, v)``,
@@ -211,20 +210,14 @@ def qsample_sketch(
     the prefilter/plain structural equality AND diverge from the oracle's
     NULLS-LAST ordering.
 
-    ``driver_max_rows`` / ``bounded_groups``: same contracts as
-    :func:`operators.kmv.kmv_sketch` (opt-in bounded driver path that
-    replaces the checkpoint pins with one collect and returns a local
-    relation — check ``kmv.is_driver_materialized`` before re-pinning;
-    and the broadcast-hint gate for unbounded group domains).
+    ``bounded_groups``: the broadcast-hint gate for unbounded group
+    domains, same contract as :func:`operators.kmv.kmv_sketch`.  The
+    distributed build always runs here; callers with a bounded group set
+    try :func:`qsample_sketch_rows` first, which returns the same sketch
+    as driver-held rows when it fits the shared driver bound.
     """
     g = [F.col(c) for c in group_cols]
     ok = F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-    if prefilter and driver_max_rows is not None:
-        local = _qs_driver_sketch(
-            df, key_col, value_col, group_cols, k, driver_max_rows
-        )
-        if local is not None:
-            return local
     bhint = F.broadcast if bounded_groups else (lambda d: d)
     raw = df.where(ok).select(
         *g, qs_hash(key_col).alias("h"), F.col(value_col).alias("v")

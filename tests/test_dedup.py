@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oltp_to_data_warehouse_pipeline_spark.operators import dedup
+from oltp_to_data_warehouse_pipeline_spark.operators import bounded, dedup
 
 DOC = "the quick brown fox jumps over the lazy dog near the river bank today"
 NEAR = "the quick brown fox jumps over the lazy dog near the river bank tonight"
@@ -89,28 +89,27 @@ def test_simhash_hamming(spark):
     assert h[(1, 2)] < 8                         # near-dup is close in hamming space
 
 
-def test_connected_components_chain_and_clique(spark):
+def test_connected_components_chain_and_clique(spark, monkeypatch):
     # graph: chain 1-2-3 (transitive, never directly paired 1-3),
     # clique 10-11-12, isolated pair 20-21; node 99 absent from any pair.
     # Run BOTH execution paths: the default size-gated driver union-find
-    # AND the distributed loop (forced with driver_max_edges=0) — the
-    # round-11 gate must never let the two diverge.
+    # AND the distributed loop (forced with a zero driver row bound) — the
+    # gate must never let the two diverge.
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (10, 12), (11, 12), (20, 21)],
         ["doc_a", "doc_b"],
     )
     want = {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
-    for dme in (1_000_000, 0):
+    for bound in (bounded.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", bound)
         labels = {
             r["node"]: r["lbl"]
-            for r in dedup.connected_components(
-                pairs, driver_max_edges=dme
-            ).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
-        assert labels == want, f"driver_max_edges={dme}"
+        assert labels == want, f"DRIVER_MAX_ROWS={bound}"
 
 
-def test_connected_components_null_endpoint_parity(spark):
+def test_connected_components_null_endpoint_parity(spark, monkeypatch):
     """A NULL endpoint must behave identically on both paths: it joins
     nothing in the distributed loop (equi-joins drop NULL keys), so it
     surfaces as its own (NULL, NULL) row and its partner keeps a
@@ -121,34 +120,34 @@ def test_connected_components_null_endpoint_parity(spark):
         schema="doc_a bigint, doc_b bigint",
     )
     want = {None: None, 7: 7, 1: 1, 2: 1}
-    for dme in (1_000_000, 0):
+    for bound in (bounded.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", bound)
         labels = {
             r["node"]: r["lbl"]
-            for r in dedup.connected_components(
-                pairs, driver_max_edges=dme
-            ).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
-        assert labels == want, f"driver_max_edges={dme}"
+        assert labels == want, f"DRIVER_MAX_ROWS={bound}"
 
 
-def test_connected_components_long_chain_converges(spark):
+def test_connected_components_long_chain_converges(spark, monkeypatch):
     # a 12-node chain needs ~log-diameter rounds of min propagation;
     # reversed edge order must not matter.  Forced onto the DISTRIBUTED
-    # loop (driver_max_edges=0): the chain is the worst case for the
+    # loop (zero driver row bound): the chain is the worst case for the
     # pointer-doubling convergence (and the fused __chg check) that the
     # driver fast path would otherwise hide.
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 0)
     pairs = spark.createDataFrame(
         [(i + 1, i) for i in range(1, 12)], ["doc_a", "doc_b"]
     )
     labels = {
         r["node"]: r["lbl"]
-        for r in dedup.connected_components(pairs, driver_max_edges=0).collect()
+        for r in dedup.connected_components(pairs).collect()
     }
     assert set(labels) == set(range(1, 13))
     assert set(labels.values()) == {1}
 
 
-def test_connected_components_random_graphs_match_union_find(spark):
+def test_connected_components_random_graphs_match_union_find(spark, monkeypatch):
     """Property check vs a driver-side union-find on random graphs."""
     import random
 
@@ -168,6 +167,7 @@ def test_connected_components_random_graphs_match_union_find(spark):
                 parent[max(ra, rb)] = min(ra, rb)
         return {n: find(n) for n in parent}
 
+    default_bound = bounded.DRIVER_MAX_ROWS
     rng = random.Random(7)
     for trial in range(4):
         n = rng.randint(4, 28)
@@ -181,14 +181,13 @@ def test_connected_components_random_graphs_match_union_find(spark):
         # alternate execution paths across trials: even trials take the
         # driver fast path, odd trials force the distributed loop — both
         # must match the reference union-find exactly
-        dme = 1_000_000 if trial % 2 == 0 else 0
+        bound = default_bound if trial % 2 == 0 else 0
+        monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", bound)
         got = {
             r["node"]: r["lbl"]
-            for r in dedup.connected_components(
-                pairs, driver_max_edges=dme
-            ).collect()
+            for r in dedup.connected_components(pairs).collect()
         }
-        assert got == expected, f"trial {trial} (driver_max_edges={dme}): {sorted(edges)}"
+        assert got == expected, f"trial {trial} (DRIVER_MAX_ROWS={bound}): {sorted(edges)}"
 
 
 def test_containment_catches_quote_that_jaccard_misses(spark):

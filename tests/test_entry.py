@@ -73,3 +73,18 @@ def test_driver_parity_every_query_sampled_or_in_next_window():
         "correctness record nor sit inside the driver's next 50-name sample "
         f"window: {orphans} — move them to the front of _VERIFY_FIRST"
     )
+
+
+def test_registry_order_is_pinned():
+    """The correctness sample reads a prefix of the registration order, so
+    a refactor must keep every name and position.  Pinned: the sha256 of
+    the newline-joined names.  A deliberate change (a new query, a
+    reordered _VERIFY_FIRST) updates the digest in the same commit."""
+    import hashlib
+
+    from oltp_to_data_warehouse_pipeline_spark.plans.queryset import registry
+
+    names, _ = registry()
+    assert len(names) == 233
+    digest = hashlib.sha256("\n".join(names).encode()).hexdigest()
+    assert digest == "03397c04ebc89006a773aaa2e1c33c657977f4179522d7bdeddde116f325e9f9"

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from oltp_to_data_warehouse_pipeline_spark.catalog import load_table
-from oltp_to_data_warehouse_pipeline_spark.operators import kmv
+from oltp_to_data_warehouse_pipeline_spark.operators import bounded, kmv
 
 SF = "/root/testdata/sf0.001"
 K = 64
@@ -207,18 +207,23 @@ def test_intersect_safe_on_duplicate_hashes(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-12 bounded driver path (driver_max_rows) + broadcast-hint gate
-# (bounded_groups): the checkpoint-pin job floor replaced by one bounded
-# collect, with the distributed path as the past-the-bound fallback.
+# Bounded driver path (kmv_sketch_rows under operators.bounded's one row
+# bound) + broadcast-hint gate (bounded_groups): the checkpoint-pin job
+# floor replaced by bounded collects, with the distributed path as the
+# past-the-bound fallback.
 # ---------------------------------------------------------------------------
 
 
-def _nrows(df):
-    # None-aware variant of _rows for fixtures with NULL group keys
+def _nsort(rows):
+    # None-aware sort for fixtures with NULL group keys
     return sorted(
-        (tuple(r) for r in df.collect()),
+        (tuple(r) for r in rows),
         key=lambda t: tuple((x is None, 0 if x is None else x) for x in t),
     )
+
+
+def _nrows(df):
+    return _nsort(df.collect())
 
 
 def test_driver_path_matches_plain(spark):
@@ -227,30 +232,53 @@ def test_driver_path_matches_plain(spark):
     (a real group for groupBy) and the skewed case where thresholds
     activate."""
     ev = load_table(spark, SF, "events").withColumn("d", F.col("ts").cast("date"))
-    drv = kmv.kmv_sketch(ev, "user_id", ["d"], k=K, driver_max_rows=100_000)
-    assert kmv.is_driver_materialized(drv)
+    drv = kmv.kmv_sketch_rows(ev, "user_id", ["d"], k=K)
+    assert drv is not None
     plain = kmv.kmv_sketch(ev, "user_id", ["d"], k=K, prefilter=False)
-    assert _nrows(drv) == _nrows(plain)
+    assert _nsort(drv) == _nrows(plain)
 
     rows = [(g, v) for g in ("a", "b") for v in range(2000 if g == "a" else 20)]
     rows += [(None, v) for v in range(500)]  # NULL group key is a group
     df = spark.createDataFrame(rows, "g string, v int")
     for k in (4, 16):
-        drv = kmv.kmv_sketch(df, "v", ["g"], k=k, driver_max_rows=100_000)
-        assert kmv.is_driver_materialized(drv)
+        drv = kmv.kmv_sketch_rows(df, "v", ["g"], k=k)
+        assert drv is not None
         plain = kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False)
-        assert _nrows(drv) == _nrows(plain), f"k={k}"
+        assert _nsort(drv) == _nrows(plain), f"k={k}"
 
 
-def test_driver_path_falls_back_past_bound(spark):
-    """driver_max_rows=1 trips the gate: the function must return the
-    distributed formulation (not a truncated local relation) and flag it
-    as NOT driver-materialized so callers re-pin."""
+def test_driver_path_falls_back_past_bound(spark, monkeypatch):
+    """A zero row bound trips the first collect: the driver path must
+    return None (not a truncated sketch), and the distributed sketch the
+    caller builds instead is the plain formulation."""
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 0)
     rows = [("a", v) for v in range(100)]
     df = spark.createDataFrame(rows, "g string, v int")
-    out = kmv.kmv_sketch(df, "v", ["g"], k=8, driver_max_rows=1)
-    assert not kmv.is_driver_materialized(out)
+    assert kmv.kmv_sketch_rows(df, "v", ["g"], k=8) is None
+    out = kmv.kmv_sketch(df, "v", ["g"], k=8)
     plain = kmv.kmv_sketch(df, "v", ["g"], k=8, prefilter=False)
+    assert _nrows(out) == _nrows(plain)
+
+
+def test_driver_path_bounds_the_rescue_collect(spark, monkeypatch):
+    """The rescue collect is bounded too.  A low _SAFETY admits ~2
+    survivors per group, so every group is audited and rescued with k
+    raw hashes: thresholds (4 rows) and survivors (16) fit under a 32-row
+    bound, the rescue (4 x 16 rows) does not — the driver path must give
+    up rather than hold it, and the distributed sketch (which runs the
+    same audit) still equals the plain formulation."""
+    monkeypatch.setattr(kmv, "_SAFETY", 0.125)
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 32)
+    rows = [(g, v) for g in "abcd" for v in range(500)]
+    df = spark.createDataFrame(rows, "g string, v int")
+    k = 16
+    assert kmv.kmv_sketch_rows(df, "v", ["g"], k=k) is None
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 100_000)
+    assert _nsort(kmv.kmv_sketch_rows(df, "v", ["g"], k=k)) == _nrows(
+        kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False)
+    )
+    out = kmv.kmv_sketch(df, "v", ["g"], k=k)
+    plain = kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False)
     assert _nrows(out) == _nrows(plain)
 
 
@@ -272,3 +300,17 @@ def test_unbounded_groups_gate_drops_broadcast_hints(spark):
     assert _nrows(kmv.kmv_sketch(df, "v", ["g"], k=4, bounded_groups=False)) == _nrows(
         kmv.kmv_sketch(df, "v", ["g"], k=4, prefilter=False)
     )
+
+
+def test_cohort_overlap_query_paths_agree(spark, monkeypatch):
+    """The cohort-overlap twins share one sketch->estimate helper: its
+    driver-rows branch and its pinned distributed fallback (forced with a
+    zero row bound) must return the same estimate."""
+    from oltp_to_data_warehouse_pipeline_spark.plans.queryset import registry
+
+    q, _ = registry()
+    got = []
+    for bound in (bounded.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", bound)
+        got.append(_rows(q["kmv_cohort_overlap_sketch"](spark, SF)))
+    assert got[0] == got[1]

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from oltp_to_data_warehouse_pipeline_spark.operators import qsketch
+from oltp_to_data_warehouse_pipeline_spark.operators import bounded, qsketch
+from tests.conftest import SF_DIR
 
 
 def _fixture(spark, n=8000, groups=8):
@@ -109,30 +110,31 @@ def test_null_keys_excluded_prefilter_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# Round-12 bounded driver path + broadcast-hint gate (the kmv twin).
+# Bounded driver path (qsample_sketch_rows) + broadcast-hint gate (the
+# kmv twin).
 # ---------------------------------------------------------------------------
 
 
-def _nrows(df):
-    # None-aware variant of _rows for fixtures with NULL group keys
+def _nsort(rows):
+    # None-aware sort for fixtures with NULL group keys
     return sorted(
-        (tuple(r) for r in df.collect()),
+        (tuple(r) for r in rows),
         key=lambda t: tuple((x is None, 0 if x is None else x) for x in t),
     )
 
 
+def _nrows(df):
+    return _nsort(df.collect())
+
+
 def test_driver_path_matches_plain(spark):
     d = _fixture(spark)
-    drv = qsketch.qsample_sketch(
-        d, "key", "val", ["qtr", "mth"], k=64, driver_max_rows=100_000
-    )
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv as _kmv
-
-    assert _kmv.is_driver_materialized(drv)
+    drv = qsketch.qsample_sketch_rows(d, "key", "val", ["qtr", "mth"], k=64)
+    assert drv is not None
     plain = qsketch.qsample_sketch(
         d, "key", "val", ["qtr", "mth"], k=64, prefilter=False
     )
-    assert _nrows(drv) == _nrows(plain)
+    assert _nsort(drv) == _nrows(plain)
 
 
 def test_driver_path_skewed_and_null_groups(spark):
@@ -143,23 +145,40 @@ def test_driver_path_skewed_and_null_groups(spark):
     rows += [(None, i, 1.5) for i in range(300)]
     df = spark.createDataFrame(rows, "g string, key int, val double")
     for k in (4, 32):
-        drv = qsketch.qsample_sketch(
-            df, "key", "val", ["g"], k=k, driver_max_rows=100_000
-        )
+        drv = qsketch.qsample_sketch_rows(df, "key", "val", ["g"], k=k)
         plain = qsketch.qsample_sketch(
             df, "key", "val", ["g"], k=k, prefilter=False
         )
-        assert _nrows(drv) == _nrows(plain), f"k={k}"
+        assert _nsort(drv) == _nrows(plain), f"k={k}"
 
 
-def test_driver_path_falls_back_past_bound(spark):
-    from oltp_to_data_warehouse_pipeline_spark.operators import kmv as _kmv
-
+def test_driver_path_falls_back_past_bound(spark, monkeypatch):
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 0)
     rows = [("a", i, i * 2) for i in range(100)]
     df = spark.createDataFrame(rows, "g string, key int, val int")
-    out = qsketch.qsample_sketch(df, "key", "val", ["g"], k=8, driver_max_rows=1)
-    assert not _kmv.is_driver_materialized(out)
+    assert qsketch.qsample_sketch_rows(df, "key", "val", ["g"], k=8) is None
+    out = qsketch.qsample_sketch(df, "key", "val", ["g"], k=8)
     plain = qsketch.qsample_sketch(df, "key", "val", ["g"], k=8, prefilter=False)
+    assert _nrows(out) == _nrows(plain)
+
+
+def test_driver_path_bounds_the_rescue_collect(spark, monkeypatch):
+    """The kmv twin's rescue-bound check: with a low _SAFETY every group
+    is audited, thresholds (4 rows) and ranked survivors fit under a
+    32-row bound, the rescue (4 x 16 rows) does not, so the driver path
+    returns None; the distributed sketch still equals the plain one."""
+    monkeypatch.setattr(qsketch, "_SAFETY", 0.125)
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 32)
+    rows = [(g, i, float(i % 97)) for g in "abcd" for i in range(500)]
+    df = spark.createDataFrame(rows, "g string, key int, val double")
+    k = 16
+    assert qsketch.qsample_sketch_rows(df, "key", "val", ["g"], k=k) is None
+    monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", 100_000)
+    plain = qsketch.qsample_sketch(df, "key", "val", ["g"], k=k, prefilter=False)
+    assert _nsort(qsketch.qsample_sketch_rows(df, "key", "val", ["g"], k=k)) == (
+        _nrows(plain)
+    )
+    out = qsketch.qsample_sketch(df, "key", "val", ["g"], k=k)
     assert _nrows(out) == _nrows(plain)
 
 
@@ -177,3 +196,17 @@ def test_unbounded_groups_gate_drops_broadcast_hints(spark):
     assert _nrows(
         qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, bounded_groups=False)
     ) == _nrows(qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, prefilter=False))
+
+
+def test_price_quantiles_query_paths_agree(spark, monkeypatch):
+    """The price-quantile twins share one sketch->estimate helper: its
+    driver-rows branch and its distributed fallback (forced with a zero
+    row bound) must return the same quantiles."""
+    from oltp_to_data_warehouse_pipeline_spark.plans.queryset import registry
+
+    q, _ = registry()
+    got = []
+    for bound in (bounded.DRIVER_MAX_ROWS, 0):
+        monkeypatch.setattr(bounded, "DRIVER_MAX_ROWS", bound)
+        got.append(_rows(q["qsketch_price_quantiles_sketch"](spark, SF_DIR)))
+    assert got[0] == got[1]
