@@ -5,7 +5,9 @@ parse/flatten/upsert → commit offsets.  Spark-native equivalent (SURVEY
 §3.3): ``readStream`` → the declarative normalizer → ``foreachBatch`` doing
 a set-oriented LWW upsert per topic, with offsets checkpointed by Structured
 Streaming.  At-least-once delivery + idempotent upsert = exactly-once table
-state (ST3).
+state (ST3).  Like the reference loop, which reads each message once, the
+``foreachBatch`` body makes one source scan per micro-batch: the raw batch
+is persisted for routing, dead-letter capture and the upsert, then released.
 
 The micro-batch function is stream-agnostic.  The container has no broker,
 so the ``format("kafka")`` path is config wiring verified against the
@@ -119,43 +121,59 @@ def _route_microbatch(
     sink,
     table_prefix: str = "",
 ) -> list[str]:
-    """The shared CDC micro-batch loop (review finding: was duplicated
-    per sink): route per topic (ST4), infer schema + additive registry
+    """The shared CDC micro-batch loop, with one source scan per
+    micro-batch: route per topic (ST4), infer schema + additive registry
     merge (B9 fixed), dead-letter capture, normalize, then hand
     ``sink(normalized, table, order_cols)`` the landing write.  Returns
     the table names written.
+
+    The raw batch (``value``, ``topic``, ``offset``) is persisted before
+    its first action and unpersisted when the loop ends, also when a sink
+    raises (the exception propagates, so Spark retries the batch).  Topic
+    discovery, the schema sample, the dead-letter probe and write, and
+    every action the sink runs then read the cached rows instead of the
+    source, as the reference consumer reads each message once
+    (`mongo_postgres_cdc.py:408-478`).  Only the raw rows are cached, so
+    ``updated_at`` / ``processed_at`` stay per-action
+    ``current_timestamp()`` values and LWW ordering is unchanged.
 
     Corrupt messages (unparseable JSON / no primary key) are excluded by
     the normalizer's pk filter — poison tolerance (ST5) without a per-row
     try/except — and CAPTURED to ``_dead_letter/<table>/`` (raw value +
     topic + reason + timestamp) so operators can replay or inspect them.
+    A batch without poison writes nothing there: an empty append would
+    still leave one schema-only parquet file per topic and batch.
     """
-    topics = [r["topic"] for r in batch.select("topic").distinct().collect()]
-    written: list[str] = []
-    for topic in topics:
-        msgs = batch.where(F.col("topic") == topic)
-        sample = [r["value"] for r in msgs.select("value").limit(SAMPLE_SIZE).collect()]
-        schema = norm.infer_schema(sample)
-        prior = _load_schema(spark, registry_dir, topic)
-        if prior is not None:
-            schema = prior.merge(schema)  # additive evolution across batches (B9 fixed)
-        if not schema.fields:
-            continue
-        table = table_prefix + norm.topic_to_table(topic)
-        # write unconditionally: an empty append is one cheap job, whereas a
-        # limit(1).count() emptiness probe would re-evaluate the same
-        # pk-extraction scan a second time just to decide whether to write
-        norm.rejected(msgs, schema).write.mode("append").parquet(
-            fs.join(registry_dir, "_dead_letter", table)
-        )
-        normalized = norm.normalize(msgs, schema)
-        order_cols = ["updated_at"]
-        if "kafka_offset" in normalized.columns:
-            order_cols.append("kafka_offset")
-        sink(normalized, table, order_cols)
-        _save_schema(spark, registry_dir, topic, schema)
-        written.append(table)
-    return written
+    batch.persist()
+    try:
+        topics = [r["topic"] for r in batch.select("topic").distinct().collect()]
+        written: list[str] = []
+        for topic in topics:
+            msgs = batch.where(F.col("topic") == topic)
+            sample = [r["value"] for r in msgs.select("value").limit(SAMPLE_SIZE).collect()]
+            schema = norm.infer_schema(sample)
+            prior = _load_schema(spark, registry_dir, topic)
+            if prior is not None:
+                schema = prior.merge(schema)  # additive evolution across batches (B9 fixed)
+            if not schema.fields:
+                continue
+            table = table_prefix + norm.topic_to_table(topic)
+            # the emptiness probe reads the cached batch, not the source
+            dead = norm.rejected(msgs, schema)
+            if not dead.isEmpty():
+                dead.write.mode("append").parquet(
+                    fs.join(registry_dir, "_dead_letter", table)
+                )
+            normalized = norm.normalize(msgs, schema)
+            order_cols = ["updated_at"]
+            if "kafka_offset" in normalized.columns:
+                order_cols.append("kafka_offset")
+            sink(normalized, table, order_cols)
+            _save_schema(spark, registry_dir, topic, schema)
+            written.append(table)
+        return written
+    finally:
+        batch.unpersist()
 
 
 def process_microbatch(

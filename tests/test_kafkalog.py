@@ -158,3 +158,20 @@ def test_cdc_end_to_end_with_offset_replay(spark, tmp_path):
         for r in read_upserted(spark, f"{wh}/users").collect()
     }
     assert after == before
+
+
+def test_cdc_reads_each_record_from_the_source_once(spark, tmp_path):
+    """The reference loop reads each message once
+    (`mongo_postgres_cdc.py:408-478`); so does the foreachBatch body.
+    Every source scan adds to ``numInputRows``, so over a two-topic drain
+    its sum equals the records sent, poison message included."""
+    log_root = str(tmp_path / "log")
+    prod = LogProducer(log_root, num_partitions=2)
+    for i in range(6):
+        prod.send("users", json.dumps({"_id": f"u{i}", "name": f"n{i}"}), key=f"u{i}")
+    for i in range(4):
+        prod.send("orders", json.dumps({"_id": f"o{i}", "total": 1.5 * i}), key=f"o{i}")
+    prod.send("users", "{not json", key="poison")
+    q = _drain(spark, log_root, str(tmp_path / "wh"), str(tmp_path / "ckpt"), ["users", "orders"])
+    assert q.exception() is None
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 11

@@ -2,13 +2,15 @@
 
 from __future__ import annotations
 
+import glob
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from oltp_to_data_warehouse_pipeline_spark.sources.upsert import read_upserted, upsert_parquet
 from oltp_to_data_warehouse_pipeline_spark.streaming import windows
-from oltp_to_data_warehouse_pipeline_spark.streaming.cdc import process_microbatch
+from oltp_to_data_warehouse_pipeline_spark.streaming.cdc import _route_microbatch, process_microbatch
 
 
 def _batch(spark, rows):
@@ -192,6 +194,42 @@ def test_dead_letter_capture(spark, tmp_path):
         ("{not valid json at all", "no_primary_key"),
         (json.dumps({"name": "no-key-here"}), "no_primary_key"),
     }
+
+
+def test_clean_batches_leave_no_dead_letter_files(spark, tmp_path):
+    """A micro-batch without poison writes nothing to ``_dead_letter/``:
+    an empty append would still leave one schema-only parquet file per
+    topic and batch, so clean traffic would grow a small-file pile."""
+    wh = str(tmp_path / "wh")
+    for i in range(2):
+        rows = [(json.dumps({"id": str(i), "name": f"n{i}"}), "users")]
+        process_microbatch(spark, spark.createDataFrame(rows, ["value", "topic"]), wh)
+    assert read_upserted(spark, f"{wh}/users").count() == 2
+    assert glob.glob(f"{wh}/_dead_letter/users/**/*.parquet", recursive=True) == []
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_microbatch_releases_its_cached_batch(spark, tmp_path):
+    """The routing loop caches the raw batch for its own actions only: the
+    cache is gone when the loop returns AND when a sink raises, and the
+    sink's exception propagates (Spark must see it to retry the batch)."""
+    rows = [(json.dumps({"id": "1", "name": "alice"}), "users")]
+    before = _persistent_rdds(spark)
+    process_microbatch(spark, spark.createDataFrame(rows, ["value", "topic"]), str(tmp_path / "a"))
+    assert _persistent_rdds(spark) <= before
+
+    def failing_sink(normalized, table, order_cols):
+        normalized.count()
+        raise RuntimeError("sink down")
+
+    batch = spark.createDataFrame(rows, ["value", "topic"])
+    with pytest.raises(RuntimeError, match="sink down"):
+        _route_microbatch(spark, batch, str(tmp_path / "b"), failing_sink)
+    assert _persistent_rdds(spark) <= before
+    assert not batch.is_cached
 
 
 def test_cdc_within_batch_ordering_by_offset(spark, tmp_path):
