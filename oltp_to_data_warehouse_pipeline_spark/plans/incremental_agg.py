@@ -34,6 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oltp_to_data_warehouse_pipeline_spark import fs
+from oltp_to_data_warehouse_pipeline_spark.sources.upsert import (
+    overwrite_partitions,
+    touched_partitions,
+)
 
 _BATCH_DIR = "_applied_batches"
 
@@ -180,12 +184,15 @@ def refresh_rollup(
         if phase == "init":
             exists = False  # redo the idempotent initial overwrite
 
+    def write(df: DataFrame) -> None:
+        if partition_key:
+            overwrite_partitions(df, path, partition_key)
+        else:
+            df.write.mode("overwrite").parquet(path)
+
     if not exists:
         _mark_begin(spark, path, batch_id, "init")
-        w = partials.write.mode("overwrite")
-        if partition_key:
-            w = w.partitionBy(partition_key)
-        w.parquet(path)
+        write(partials)
         _mark_applied(spark, path, batch_id)
         return
 
@@ -194,29 +201,10 @@ def refresh_rollup(
     _mark_begin(spark, path, batch_id, "merge")
     stored = spark.read.parquet(path)
     if partition_key:
-        # prune the stored read to touched partitions via a broadcast
-        # semi join (sketchstore._merge_day_partitions' idiom — round-9
-        # review: this previously collect()ed the key set to the driver;
-        # bounded, but the semi join keeps the whole plan executor-side
-        # and is partition pruning, not a scan, on the keyed store).
-        # NULL-SAFE on purpose (round-10 review): a delta touching the
-        # NULL partition (__HIVE_DEFAULT_PARTITION__) must pull the
-        # stored NULL rows into the merge, or the dynamic overwrite
-        # would reset that partition to the batch's values alone —
-        # both isin() and a plain equi-semi-join silently drop NULLs.
-        touched = partials.select(
-            F.col(partition_key).alias("__touched_pk")
-        ).distinct()
-        stored = stored.join(
-            F.broadcast(touched),
-            F.col(partition_key).eqNullSafe(F.col("__touched_pk")),
-            "left_semi",
-        )
-    merged = spec.merge(stored.unionByName(partials))
-    w = merged.write.mode("overwrite")
-    if partition_key:
-        w = w.partitionBy(partition_key).option("partitionOverwriteMode", "dynamic")
-    w.parquet(path)
+        # only the partitions the delta touches, NULL included (round-10
+        # review: else the overwrite resets that partition to the batch)
+        stored = touched_partitions(stored, partials, partition_key)
+    write(spec.merge(stored.unionByName(partials)))
     _mark_applied(spark, path, batch_id)
 
 

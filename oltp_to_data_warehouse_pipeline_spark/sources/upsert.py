@@ -6,8 +6,10 @@ ACID table format is *bucketed recompaction*:
 
 - the table is laid out partitioned by ``__bucket = pmod(xxhash64(key), N)``;
 - an incoming batch is deduped (LWW) and bucketed the same way;
-- only the buckets present in the batch are read back, merged, and
-  dynamically overwritten (``partitionOverwriteMode=dynamic``).
+- only the buckets present in the batch are read back
+  (:func:`touched_partitions`), merged, and dynamically overwritten
+  (:func:`overwrite_partitions`); the sketch stores and the incremental
+  rollups share the two, each with its own merge in between.
 
 Cost per batch ∝ (touched buckets) × (bucket size), not table size — the
 property that makes this viable at 100 TB: with N≈8192 buckets a batch
@@ -23,13 +25,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from oltp_to_data_warehouse_pipeline_spark import fs
+from oltp_to_data_warehouse_pipeline_spark.operators import bounded
 from oltp_to_data_warehouse_pipeline_spark.operators.dedup import lww_dedup
 
 BUCKET_COL = "__bucket"
+# A property of the stored table, not of a call: another count would hash
+# a key into a new bucket while its old row stays, and it would read twice.
+NUM_BUCKETS = 64
 
 
-def _bucketed(df: DataFrame, key: str, num_buckets: int) -> DataFrame:
-    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(num_buckets)))
+def _bucketed(df: DataFrame, key: str) -> DataFrame:
+    return df.withColumn(BUCKET_COL, F.pmod(F.xxhash64(F.col(key).cast("string")), F.lit(NUM_BUCKETS)))
+
+
+def touched_partitions(stored: DataFrame, fresh: DataFrame, part_col: str) -> DataFrame:
+    """``stored``'s rows in the ``part_col`` partitions ``fresh`` touches.
+
+    ``fresh``'s partition values, collected through
+    :func:`operators.bounded.collect_bounded`, become a literal filter that
+    the file scan prunes statically; a touched NULL partition is matched
+    with ``isNull`` (``isin`` never matches NULL).  Past the bound they stay
+    on the executors in a NULL-safe semi join, with no broadcast hint."""
+    rows = bounded.collect_bounded(fresh.select(part_col).distinct())
+    if rows is None:
+        keys = fresh.select(F.col(part_col).alias("__touched")).distinct()
+        return stored.join(keys, F.col(part_col).eqNullSafe(F.col("__touched")), "left_semi")
+    values = [r[0] for r in rows]
+    hit = F.col(part_col).isin([v for v in values if v is not None])
+    if None in values:
+        hit = hit | F.col(part_col).isNull()
+    return stored.where(hit)
+
+
+def overwrite_partitions(df: DataFrame, path: str, part_col: str) -> None:
+    """Write ``df`` partitioned by ``part_col``, replacing only the
+    partitions it holds rows for, on any session's overwrite conf."""
+    (
+        df.repartition(part_col)
+        .write.mode("overwrite")
+        .partitionBy(part_col)
+        .option("partitionOverwriteMode", "dynamic")
+        .parquet(path)
+    )
 
 
 def upsert_parquet(
@@ -38,7 +75,6 @@ def upsert_parquet(
     path: str,
     key: str,
     order_cols: list[str],
-    num_buckets: int = 64,
 ) -> None:
     """LWW-upsert ``batch`` into the parquet table at ``path``.
 
@@ -61,34 +97,20 @@ def upsert_parquet(
         content = F.xxhash64(*[F.col(c) for c in sorted(df.columns)])
         return [F.col(c).desc() for c in order_cols] + [content.desc()]
 
-    incoming = _bucketed(lww_dedup(batch, [key], order_for(batch)), key, num_buckets)
+    incoming = _bucketed(lww_dedup(batch, [key], order_for(batch)), key)
 
     # Hadoop-FS existence (not os.path): the table may live on s3a://hdfs://,
     # where a driver-local check would wrongly take the fresh-table branch
     # and overwrite the store.
     if not fs.has_data_files(spark, path):
-        (
-            incoming.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
+        overwrite_partitions(incoming, path, BUCKET_COL)
         return
 
     existing = spark.read.option("mergeSchema", "true").parquet(path)
-    touched = [r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()]
-    # partition pruning: only touched buckets are scanned
-    relevant = existing.where(F.col(BUCKET_COL).isin(touched))
+    relevant = touched_partitions(existing, incoming, BUCKET_COL)
     # schema evolution (B9 fixed): allowMissingColumns unions additively
     unioned = relevant.unionByName(incoming, allowMissingColumns=True)
-    merged = lww_dedup(unioned, [key], order_for(unioned))
-    (
-        merged.repartition(BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
+    overwrite_partitions(lww_dedup(unioned, [key], order_for(unioned)), path, BUCKET_COL)
 
 
 def scd2_upsert_parquet(
@@ -98,7 +120,6 @@ def scd2_upsert_parquet(
     key: str,
     tracked: list[str],
     eff_col: str,
-    num_buckets: int = 64,
 ) -> None:
     """Maintain an SCD Type 2 dimension on bucketed parquet from CDC batches
     (the ``foreachBatch`` body for a versioned-dimension sink — the Type-2
@@ -129,28 +150,14 @@ def scd2_upsert_parquet(
         attrs = [c for c in latest.columns if c != eff_col]
         empty_dim = scd2_init(latest.select(*attrs).limit(0))
         first = scd2_apply(empty_dim, latest, key, tracked, eff_col=eff_col)
-        (
-            _bucketed(first, key, num_buckets)
-            .repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
+        overwrite_partitions(_bucketed(first, key), path, BUCKET_COL)
         return
 
-    incoming = _bucketed(latest, key, num_buckets)
-    existing = spark.read.parquet(path)
-    touched = [r[BUCKET_COL] for r in incoming.select(BUCKET_COL).distinct().collect()]
-    relevant = existing.where(F.col(BUCKET_COL).isin(touched)).drop(BUCKET_COL)
+    relevant = touched_partitions(
+        spark.read.parquet(path), _bucketed(latest, key), BUCKET_COL
+    ).drop(BUCKET_COL)
     merged = scd2_apply(relevant, latest, key, tracked, eff_col=eff_col)
-    (
-        _bucketed(merged, key, num_buckets)
-        .repartition(BUCKET_COL)
-        .write.mode("overwrite")
-        .partitionBy(BUCKET_COL)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(path)
-    )
+    overwrite_partitions(_bucketed(merged, key), path, BUCKET_COL)
 
 
 def read_scd2(spark: SparkSession, path: str, current_only: bool = False) -> DataFrame:
@@ -178,31 +185,25 @@ def compact_tombstones(
     if delete_col not in existing.columns:
         return
     expired = F.coalesce(F.col(delete_col), F.lit(False)) & (F.col(order_col) <= F.lit(horizon))
-    touched = [
-        r[BUCKET_COL]
-        for r in existing.where(expired).select(BUCKET_COL).distinct().collect()
-    ]
-    if not touched:
+    # one row per bucket holding an expired tombstone, ≤ NUM_BUCKETS rows:
+    # does any of its rows survive the purge?
+    hit = (
+        existing.groupBy(BUCKET_COL)
+        .agg(F.bool_or(expired).alias("hit"), F.bool_or(~expired).alias("keeps"))
+        .where("hit")
+        .collect()
+    )
+    if not hit:
         return
-    kept = existing.where(F.col(BUCKET_COL).isin(touched)).where(~expired)
-    kept_buckets = {r[BUCKET_COL] for r in kept.select(BUCKET_COL).distinct().collect()}
-    if kept_buckets:
-        (
-            kept.repartition(BUCKET_COL)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(path)
-        )
+    if any(r["keeps"] for r in hit):
+        kept = touched_partitions(existing, existing.where(expired), BUCKET_COL)
+        overwrite_partitions(kept.where(~expired), path, BUCKET_COL)
     # dynamic overwrite only rewrites partitions it writes rows into; a
     # bucket whose every row expired produces no output rows, so its stale
     # files must be removed explicitly
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for b in set(touched) - kept_buckets:
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/{BUCKET_COL}={b}")
-        fs = p.getFileSystem(hconf)
-        fs.delete(p, True)
+    for r in hit:
+        if not r["keeps"]:
+            fs.delete(spark, fs.join(path, f"{BUCKET_COL}={r[BUCKET_COL]}"))
 
 
 def read_upserted(spark: SparkSession, path: str, delete_col: str | None = None) -> DataFrame:

@@ -180,7 +180,6 @@ def process_microbatch(
     spark: SparkSession,
     batch: DataFrame,
     warehouse_dir: str,
-    num_buckets: int = 64,
 ) -> list[str]:
     """One micro-batch into the PARQUET warehouse: the shared routing loop
     (:func:`_route_microbatch`) with the bucketed LWW parquet upsert as
@@ -193,10 +192,17 @@ def process_microbatch(
             fs.join(warehouse_dir, table),
             key="kafka_primary_key",
             order_cols=order_cols,
-            num_buckets=num_buckets,
         )
 
     return _route_microbatch(spark, batch, warehouse_dir, sink)
+
+
+def _start(stream: DataFrame, process, checkpoint_dir: str, trigger_seconds: int | None):
+    """Run ``process(batch, epoch_id)`` per micro-batch, offsets checkpointed."""
+    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
+    if trigger_seconds is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
 
 
 def start_cdc(
@@ -209,14 +215,10 @@ def start_cdc(
     """Attach the micro-batch upsert to any streaming DataFrame with columns
     (value string, topic string).  ``query.stop()`` = graceful shutdown (ST6).
     """
-    writer = stream.writeStream.foreachBatch(
-        lambda df, _epoch: process_microbatch(spark, df, warehouse_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(
+        stream, lambda df, _epoch: process_microbatch(spark, df, warehouse_dir),
+        checkpoint_dir, trigger_seconds,
+    )
 
 
 def shutdown(query, drain: bool = True, timeout_s: float = 60.0) -> bool:
@@ -384,13 +386,8 @@ def start_cdc_jdbc(
 ):
     """:func:`start_cdc` variant landing in a JDBC warehouse (see
     :func:`process_microbatch_jdbc`)."""
-    writer = stream.writeStream.foreachBatch(
-        lambda df, _epoch: process_microbatch_jdbc(
-            spark, df, cfg, registry_dir, dialect=dialect
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start(
+        stream,
+        lambda df, _epoch: process_microbatch_jdbc(spark, df, cfg, registry_dir, dialect=dialect),
+        checkpoint_dir, trigger_seconds,
+    )

@@ -7,9 +7,9 @@ day) instead of re-shuffling raw events per window.  This module maintains
 that store incrementally: each micro-batch is sketched per day
 (:func:`operators.kmv.kmv_sketch` — O(k) rows per day on the exchange),
 merged with the stored sketches of exactly the days the batch touched, and
-the affected day PARTITIONS are overwritten in place (dynamic partition
-overwrite — untouched days are never rewritten, so per-batch IO is
-O(days-in-batch × k), independent of history length).
+the affected day PARTITIONS are overwritten in place (the upsert sink's
+touched-partition read and dynamic overwrite — untouched days are neither
+read nor rewritten, so per-batch IO is O(days-in-batch × k)).
 
 Replay safety comes from the merge itself: re-sketching a union that
 already contains a batch's hashes returns the identical k-minimum set, so
@@ -44,6 +44,10 @@ from pyspark.sql.streaming import StreamingQuery
 
 from oltp_to_data_warehouse_pipeline_spark import fs
 from oltp_to_data_warehouse_pipeline_spark.operators import kmv
+from oltp_to_data_warehouse_pipeline_spark.sources.upsert import (
+    overwrite_partitions,
+    touched_partitions,
+)
 from oltp_to_data_warehouse_pipeline_spark.util import release_checkpoint
 
 
@@ -121,17 +125,16 @@ def _merge_day_partitions(
     partition overwrite of the touched days only.
 
     The merged relation is ≤ k rows per touched day (sketch-sized), and
-    the read side prunes to touched days via the semi join on a ≤
-    days-in-batch key set — with the store partitioned by ``d``, that is
-    partition pruning, not a scan."""
+    the store read is :func:`sources.upsert.touched_partitions`: the
+    batch's days become a literal filter on the ``d`` partition column,
+    so the scan lists and reads the touched days' files only."""
     spark = batch.sparkSession
     # Rows with a NULL/uncastable timestamp have no day — they cannot live
-    # in a day-partitioned store (a NULL partition would also dodge the
-    # touched-days pruning below), so they are excluded explicitly.
+    # in a day-partitioned store, so they are excluded explicitly.
     days = batch.withColumn("d", F.col(ts_col).cast("date")).where(
         F.col("d").isNotNull()
     )
-    # Pin the sketch: it feeds BOTH the touched-day broadcast and the
+    # Pin the sketch: it feeds BOTH the touched-day collect and the
     # merge union, and Spark would otherwise run the whole sketch build
     # twice per micro-batch.  Sketch-sized (≤ k rows per day in the
     # batch), so always safe.  build_fn must pass pin=False to its
@@ -145,23 +148,14 @@ def _merge_day_partitions(
     try:
         fresh = pinned
         if fs.has_data_files(spark, store_path):
-            touched = fresh.select("d").distinct()
-            stored = (
-                spark.read.parquet(store_path)
-                .join(F.broadcast(touched), "d", "left_semi")
-                .select("d", *data_cols)
-            )
+            stored = touched_partitions(
+                spark.read.parquet(store_path), fresh, "d"
+            ).select("d", *data_cols)
             unioned = fresh.unionByName(stored)
             if dedup:
                 unioned = unioned.dropDuplicates(["d", *data_cols])
             fresh = merge_fn(unioned)
-        (
-            fresh.select(*data_cols, "d")  # partition column last
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("d")
-            .parquet(store_path)
-        )
+        overwrite_partitions(fresh.select(*data_cols, "d"), store_path, "d")
     finally:
         # A long-running stream calls this every micro-batch: drop the
         # checkpoint blocks NOW, or they accumulate for the stream's life.

@@ -94,7 +94,7 @@ def test_scd2_sink_builds_versioned_dim(spark, tmp_path):
     path = str(tmp_path / "dim")
     schema = "k: long, seg: string, bal: double, eff: string"
     b1 = spark.createDataFrame([(1, "A", 10.0, "2020-01-01"), (2, "B", 20.0, "2020-01-01")], schema)
-    scd2_upsert_parquet(spark, b1, path, "k", ["seg", "bal"], "eff", num_buckets=4)
+    scd2_upsert_parquet(spark, b1, path, "k", ["seg", "bal"], "eff")
     assert read_scd2(spark, path).count() == 2
     assert read_scd2(spark, path, current_only=True).count() == 2
 
@@ -109,7 +109,7 @@ def test_scd2_sink_builds_versioned_dim(spark, tmp_path):
         ],
         schema,
     )
-    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff", num_buckets=4)
+    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff")
     dim = read_scd2(spark, path)
     k1 = sorted(dim.where("k = 1").collect(), key=lambda r: str(r["valid_from"]))
     assert [r["seg"] for r in k1] == ["A", "Z"]
@@ -130,11 +130,11 @@ def test_scd2_sink_replay_is_idempotent(spark, tmp_path):
     schema = "k: long, seg: string, bal: double, eff: string"
     b1 = spark.createDataFrame([(1, "A", 10.0, "2020-01-01")], schema)
     b2 = spark.createDataFrame([(1, "Z", 11.0, "2020-02-01")], schema)
-    scd2_upsert_parquet(spark, b1, path, "k", ["seg", "bal"], "eff", num_buckets=4)
-    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff", num_buckets=4)
+    scd2_upsert_parquet(spark, b1, path, "k", ["seg", "bal"], "eff")
+    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff")
     before = {tuple(r) for r in read_scd2(spark, path).collect()}
     # at-least-once delivery: the same batch arrives again
-    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff", num_buckets=4)
+    scd2_upsert_parquet(spark, b2, path, "k", ["seg", "bal"], "eff")
     after = {tuple(r) for r in read_scd2(spark, path).collect()}
     assert after == before
     assert len(after) == 2
@@ -159,7 +159,7 @@ def test_scd2_sink_from_real_stream(spark, tmp_path):
     q = (
         stream.writeStream.foreachBatch(
             lambda batch, _id: scd2_upsert_parquet(
-                batch.sparkSession, batch, dim_path, "k", ["seg", "bal"], "eff", num_buckets=4
+                batch.sparkSession, batch, dim_path, "k", ["seg", "bal"], "eff"
             )
         )
         .option("checkpointLocation", ckpt)

@@ -72,10 +72,10 @@ def test_compact_tombstones_purges_past_horizon(spark, tmp_path):
     upsert_parquet(
         spark,
         _batch(spark, [("a", 1, "v1", False), ("b", 1, "v1", False)]),
-        path, "k", ["updated_at"], num_buckets=4,
+        path, "k", ["updated_at"],
     )
-    upsert_parquet(spark, _batch(spark, [("a", 2, None, True)]), path, "k", ["updated_at"], num_buckets=4)
-    upsert_parquet(spark, _batch(spark, [("b", 9, None, True)]), path, "k", ["updated_at"], num_buckets=4)
+    upsert_parquet(spark, _batch(spark, [("a", 2, None, True)]), path, "k", ["updated_at"])
+    upsert_parquet(spark, _batch(spark, [("b", 9, None, True)]), path, "k", ["updated_at"])
 
     # horizon=5: a's tombstone (t=2) expires, b's (t=9) is retained
     compact_tombstones(spark, path, "deleted", "updated_at", 5)
@@ -91,10 +91,28 @@ def test_compact_clears_fully_emptied_bucket(spark, tmp_path):
     path = str(tmp_path / "t")
     # single bucket -> after compaction the whole bucket partition is empty;
     # the stale files must be physically removed, not left behind
-    upsert_parquet(spark, _batch(spark, [("a", 1, None, True)]), path, "k", ["updated_at"], num_buckets=1)
+    upsert_parquet(spark, _batch(spark, [("a", 1, None, True)]), path, "k", ["updated_at"])
     compact_tombstones(spark, path, "deleted", "updated_at", 5)
     import glob
     assert not glob.glob(f"{path}/__bucket=*/*.parquet"), "emptied bucket files must be deleted"
+
+
+def test_compact_rewrites_a_bucket_shared_with_live_rows(spark, tmp_path):
+    from oltp_to_data_warehouse_pipeline_spark.sources.upsert import BUCKET_COL, compact_tombstones
+
+    path = str(tmp_path / "t")
+    # 100 keys in 64 buckets: some bucket holds two keys
+    upsert_parquet(spark, _batch(spark, [(f"k{i}", 1, "v1", False) for i in range(100)]), path, "k", ["updated_at"])
+    stored = spark.read.parquet(path)
+    shared = stored.groupBy(BUCKET_COL).count().where("count > 1").first()[BUCKET_COL]
+    dead, live = [r["k"] for r in stored.where(f"{BUCKET_COL} = {shared}").limit(2).collect()]
+    upsert_parquet(spark, _batch(spark, [(dead, 2, None, True)]), path, "k", ["updated_at"])
+
+    compact_tombstones(spark, path, "deleted", "updated_at", 5)
+    raw = read_upserted(spark, path)
+    assert raw.where(f"k = '{dead}'").count() == 0, "expired tombstone must be purged"
+    assert raw.where(f"k = '{live}'").count() == 1, "its bucket's live row must survive"
+    assert _state(spark, path) == {(f"k{i}", "v1") for i in range(100)} - {(dead, "v1")}
 
 
 def test_cdc_delete_marker_end_to_end(spark, tmp_path):
