@@ -797,12 +797,11 @@ def upsert_sink(
     id must change when the checkpoint directory does (stale ids from a
     deleted checkpoint would wrongly suppress fresh batches).
 
-    Usage::
+    Usage (:func:`streaming.multisink.fanout_sink` starts the query)::
 
-        stream.writeStream.foreachBatch(
-            upsert_sink(cfg, "wh", keys=["id"], order_cols=["ver"],
-                        checkpoint_id=ckpt)
-        ).option("checkpointLocation", ckpt).start()
+        sink = upsert_sink(cfg, "wh", keys=["id"], order_cols=["ver"],
+                           checkpoint_id=ckpt)
+        fanout_sink(stream, [sink], ckpt)
     """
 
     def fold(batch: DataFrame, epoch_id: int) -> None:

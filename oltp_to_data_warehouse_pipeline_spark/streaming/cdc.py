@@ -6,8 +6,10 @@ parse/flatten/upsert → commit offsets.  Spark-native equivalent (SURVEY
 a set-oriented LWW upsert per topic, with offsets checkpointed by Structured
 Streaming.  At-least-once delivery + idempotent upsert = exactly-once table
 state (ST3).  Like the reference loop, which reads each message once, the
-``foreachBatch`` body makes one source scan per micro-batch: the raw batch
-is persisted for routing, dead-letter capture and the upsert, then released.
+query makes one source scan per micro-batch: it starts through the
+package's one ``foreachBatch`` starter (:func:`streaming.multisink.fanout_sink`),
+which persists the raw batch for routing, dead-letter capture and the
+upsert, then releases it.
 
 The micro-batch function is stream-agnostic.  The container has no broker,
 so the ``format("kafka")`` path is config wiring verified against the
@@ -26,6 +28,7 @@ from pyspark.sql import functions as F
 from oltp_to_data_warehouse_pipeline_spark import fs
 from oltp_to_data_warehouse_pipeline_spark.sources.upsert import upsert_parquet
 from oltp_to_data_warehouse_pipeline_spark.streaming import normalizer as norm
+from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 
 SAMPLE_SIZE = 200
 
@@ -121,21 +124,21 @@ def _route_microbatch(
     sink,
     table_prefix: str = "",
 ) -> list[str]:
-    """The shared CDC micro-batch loop, with one source scan per
-    micro-batch: route per topic (ST4), infer schema + additive registry
-    merge (B9 fixed), dead-letter capture, normalize, then hand
-    ``sink(normalized, table, order_cols)`` the landing write.  Returns
-    the table names written.
+    """The shared CDC micro-batch loop: route per topic (ST4), infer
+    schema + additive registry merge (B9 fixed), dead-letter capture,
+    normalize, then hand ``sink(normalized, table, order_cols)`` the
+    landing write.  Returns the table names written.  A sink's exception
+    propagates, so Spark retries the batch.
 
-    The raw batch (``value``, ``topic``, ``offset``) is persisted before
-    its first action and unpersisted when the loop ends, also when a sink
-    raises (the exception propagates, so Spark retries the batch).  Topic
-    discovery, the schema sample, the dead-letter probe and write, and
-    every action the sink runs then read the cached rows instead of the
-    source, as the reference consumer reads each message once
-    (`mongo_postgres_cdc.py:408-478`).  Only the raw rows are cached, so
-    ``updated_at`` / ``processed_at`` stay per-action
-    ``current_timestamp()`` values and LWW ordering is unchanged.
+    The loop caches nothing itself.  Under :func:`start_cdc` and
+    :func:`start_cdc_jdbc` the starter (:func:`streaming.multisink.fanout_sink`)
+    has persisted the raw batch (``value``, ``topic``, ``offset``) before
+    this loop runs and releases it afterwards, so topic discovery, the
+    schema sample, the dead-letter probe and write, and every action the
+    sink runs read the cached rows instead of the source, as the reference
+    consumer reads each message once (`mongo_postgres_cdc.py:408-478`).
+    Only the raw rows are cached, so ``updated_at`` / ``processed_at`` stay
+    per-action ``current_timestamp()`` values and LWW ordering is unchanged.
 
     Corrupt messages (unparseable JSON / no primary key) are excluded by
     the normalizer's pk filter — poison tolerance (ST5) without a per-row
@@ -144,36 +147,32 @@ def _route_microbatch(
     A batch without poison writes nothing there: an empty append would
     still leave one schema-only parquet file per topic and batch.
     """
-    batch.persist()
-    try:
-        topics = [r["topic"] for r in batch.select("topic").distinct().collect()]
-        written: list[str] = []
-        for topic in topics:
-            msgs = batch.where(F.col("topic") == topic)
-            sample = [r["value"] for r in msgs.select("value").limit(SAMPLE_SIZE).collect()]
-            schema = norm.infer_schema(sample)
-            prior = _load_schema(spark, registry_dir, topic)
-            if prior is not None:
-                schema = prior.merge(schema)  # additive evolution across batches (B9 fixed)
-            if not schema.fields:
-                continue
-            table = table_prefix + norm.topic_to_table(topic)
-            # the emptiness probe reads the cached batch, not the source
-            dead = norm.rejected(msgs, schema)
-            if not dead.isEmpty():
-                dead.write.mode("append").parquet(
-                    fs.join(registry_dir, "_dead_letter", table)
-                )
-            normalized = norm.normalize(msgs, schema)
-            order_cols = ["updated_at"]
-            if "kafka_offset" in normalized.columns:
-                order_cols.append("kafka_offset")
-            sink(normalized, table, order_cols)
-            _save_schema(spark, registry_dir, topic, schema)
-            written.append(table)
-        return written
-    finally:
-        batch.unpersist()
+    topics = [r["topic"] for r in batch.select("topic").distinct().collect()]
+    written: list[str] = []
+    for topic in topics:
+        msgs = batch.where(F.col("topic") == topic)
+        sample = [r["value"] for r in msgs.select("value").limit(SAMPLE_SIZE).collect()]
+        schema = norm.infer_schema(sample)
+        prior = _load_schema(spark, registry_dir, topic)
+        if prior is not None:
+            schema = prior.merge(schema)  # additive evolution across batches (B9 fixed)
+        if not schema.fields:
+            continue
+        table = table_prefix + norm.topic_to_table(topic)
+        # under the starter the emptiness probe reads the cached batch
+        dead = norm.rejected(msgs, schema)
+        if not dead.isEmpty():
+            dead.write.mode("append").parquet(
+                fs.join(registry_dir, "_dead_letter", table)
+            )
+        normalized = norm.normalize(msgs, schema)
+        order_cols = ["updated_at"]
+        if "kafka_offset" in normalized.columns:
+            order_cols.append("kafka_offset")
+        sink(normalized, table, order_cols)
+        _save_schema(spark, registry_dir, topic, schema)
+        written.append(table)
+    return written
 
 
 def process_microbatch(
@@ -197,12 +196,11 @@ def process_microbatch(
     return _route_microbatch(spark, batch, warehouse_dir, sink)
 
 
-def _start(stream: DataFrame, process, checkpoint_dir: str, trigger_seconds: int | None):
-    """Run ``process(batch, epoch_id)`` per micro-batch, offsets checkpointed."""
-    writer = stream.writeStream.foreachBatch(process).option("checkpointLocation", checkpoint_dir)
+def _trigger(trigger_seconds: int | None) -> dict:
+    """``trigger_seconds`` as a starter trigger: None drains and stops."""
     if trigger_seconds is None:
-        return writer.trigger(availableNow=True).start()
-    return writer.trigger(processingTime=f"{trigger_seconds} seconds").start()
+        return {"availableNow": True}
+    return {"processingTime": f"{trigger_seconds} seconds"}
 
 
 def start_cdc(
@@ -215,9 +213,9 @@ def start_cdc(
     """Attach the micro-batch upsert to any streaming DataFrame with columns
     (value string, topic string).  ``query.stop()`` = graceful shutdown (ST6).
     """
-    return _start(
-        stream, lambda df, _epoch: process_microbatch(spark, df, warehouse_dir),
-        checkpoint_dir, trigger_seconds,
+    return fanout_sink(
+        stream, [lambda df, _epoch: process_microbatch(spark, df, warehouse_dir)],
+        checkpoint_dir, trigger=_trigger(trigger_seconds),
     )
 
 
@@ -386,8 +384,8 @@ def start_cdc_jdbc(
 ):
     """:func:`start_cdc` variant landing in a JDBC warehouse (see
     :func:`process_microbatch_jdbc`)."""
-    return _start(
+    return fanout_sink(
         stream,
-        lambda df, _epoch: process_microbatch_jdbc(spark, df, cfg, registry_dir, dialect=dialect),
-        checkpoint_dir, trigger_seconds,
+        [lambda df, _epoch: process_microbatch_jdbc(spark, df, cfg, registry_dir, dialect=dialect)],
+        checkpoint_dir, trigger=_trigger(trigger_seconds),
     )

@@ -42,6 +42,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from oltp_to_data_warehouse_pipeline_spark import fs
 from oltp_to_data_warehouse_pipeline_spark.functions import text as text_fns
+from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 
 
 def dedup_batch_against_corpus(
@@ -82,14 +83,7 @@ def ingest_documents(
         kept = dedup_batch_against_corpus(batch, corpus_path, id_col, text_col)
         kept.write.mode("append").parquet(corpus_path)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("corpus-ingest")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return fanout_sink(stream, [fold], checkpoint, "corpus-ingest", trigger)
 
 
 def ingest_documents_watermarked(

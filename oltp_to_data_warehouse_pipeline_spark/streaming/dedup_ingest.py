@@ -120,11 +120,11 @@ def dedup_ingest_sink(
     shingle_n: int = 3,
     reject_path: str | None = None,
 ):
-    """``foreachBatch`` body.  Usage::
+    """``foreachBatch`` body.  Usage, started by
+    :func:`streaming.multisink.fanout_sink`::
 
-        stream.writeStream.foreachBatch(
-            dedup_ingest_sink("/idx", "/corpus", reject_path="/rejects")
-        ).option("checkpointLocation", ckpt).start()
+        sink = dedup_ingest_sink("/idx", "/corpus", reject_path="/rejects")
+        fanout_sink(stream, [sink], ckpt)
 
     Stores: ``corpus_path`` holds admitted documents (all batch columns),
     ``index_path`` their band keys, ``reject_path`` (optional) the

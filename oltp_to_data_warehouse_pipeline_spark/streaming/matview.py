@@ -39,6 +39,7 @@ from oltp_to_data_warehouse_pipeline_spark.plans.incremental_agg import (
     RollupSpec,
     refresh_rollup,
 )
+from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 
 
 def _stream_identity(spark, checkpoint: str) -> str | None:
@@ -103,11 +104,4 @@ def maintain_rollup(
             partition_key=partition_key,
         )
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return fanout_sink(stream, [fold], checkpoint, query_name, trigger)

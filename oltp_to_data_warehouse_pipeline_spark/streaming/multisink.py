@@ -1,14 +1,17 @@
-"""Multi-sink streaming fanout: one micro-batch computation, several sinks.
+"""The package's one ``foreachBatch`` starter: one micro-batch computation,
+one or several sinks.
 
-Structured Streaming allows one sink per query; running N queries over the
-same source recomputes (and for Kafka, re-reads) the stream N times and
-gives each query its own offsets — the sinks drift.  The standard answer is
-a ``foreachBatch`` that persists the batch once and feeds every sink from
-the cached copy; this module packages that with the error contract made
-explicit:
+Every streaming sink in the package (CDC upsert, materialized view, sketch
+stores, corpus ingestion, trending top-k) starts its query through
+:func:`fanout_sink`.  Structured Streaming allows one sink per query;
+running N queries over the same source recomputes (and for Kafka, re-reads)
+the stream N times and gives each query its own offsets — the sinks drift.
+The standard answer is a ``foreachBatch`` that persists the batch once and
+feeds every sink from the cached copy; this module packages that with the
+error contract made explicit:
 
-- the batch is persisted BEFORE the first sink so sink k never recomputes
-  the transformations sink 1 already paid for;
+- the batch is persisted BEFORE the first sink, so no sink action re-runs
+  the source (a one-sink query reads each record once too);
 - sinks run sequentially, in order; a failing sink aborts the batch, Spark
   retries it, and ALL sinks see the batch again — so every sink must be
   idempotent per (its own) batch delivery, which is exactly the contract
@@ -16,7 +19,8 @@ explicit:
   dedup corpus append);
 - there is deliberately NO per-sink error swallowing: skipping a failed
   sink would silently fork the sinks' histories, the exact drift the
-  single-pass design exists to prevent.
+  single-pass design exists to prevent;
+- the cache is released when the batch ends, also when a sink raises.
 
 At 100 TB the win is the single source scan + single shuffle chain per
 batch amortized over N sinks.
@@ -48,8 +52,7 @@ def gated(sink: Sink, expectations: list) -> Sink:
     uncommitted), so a transient upstream glitch self-heals while a
     persistent one stops the stream loudly — the operator decides, with
     the violation report in the exception message.  Costs one extra
-    aggregation pass over the (persisted, when used under
-    :func:`fanout_sink`) batch."""
+    aggregation pass over the batch."""
     from oltp_to_data_warehouse_pipeline_spark.operators.expectations import validate
 
     def run(batch: DataFrame, epoch_id: int) -> None:
@@ -71,11 +74,16 @@ def fanout_sink(
     stream: DataFrame,
     sinks: list[Sink],
     checkpoint: str,
-    query_name: str = "fanout",
+    query_name: str | None = None,
     trigger: dict | None = None,
 ) -> StreamingQuery:
     """Attach ``sinks`` (each a ``(batch_df, epoch_id) -> None``) to one
-    streaming query.  Returns the started query; callers own await/stop."""
+    streaming query.  Returns the started query; callers own await/stop.
+
+    ``trigger`` passes through to ``DataStreamWriter.trigger``; the default
+    drains what is available and stops (``{"availableNow": True}``).  The
+    query is named only when ``query_name`` is given: active names must be
+    unique per session.  The output mode is Spark's default, append."""
     if not sinks:
         raise ValueError("fanout_sink needs at least one sink")
 
@@ -87,11 +95,7 @@ def fanout_sink(
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName(query_name)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    writer = stream.writeStream.foreachBatch(fold).option("checkpointLocation", checkpoint)
+    if query_name is not None:
+        writer = writer.queryName(query_name)
+    return writer.trigger(**(trigger or {"availableNow": True})).start()

@@ -48,6 +48,7 @@ from oltp_to_data_warehouse_pipeline_spark.sources.upsert import (
     overwrite_partitions,
     touched_partitions,
 )
+from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 from oltp_to_data_warehouse_pipeline_spark.util import release_checkpoint
 
 
@@ -202,14 +203,7 @@ def maintain_kmv_store(
     def fold(batch: DataFrame, epoch_id: int) -> None:
         merge_batch_into_store(batch, store_path, key_col, ts_col, k)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("kmv-sketch-store")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return fanout_sink(stream, [fold], checkpoint, "kmv-sketch-store", trigger)
 
 
 def window_estimate(
@@ -306,14 +300,7 @@ def maintain_qsample_store(
             batch, store_path, key_col, value_col, ts_col, k
         )
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("qsample-store")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return fanout_sink(stream, [fold], checkpoint, "qsample-store", trigger)
 
 
 def window_quantiles(
@@ -415,14 +402,7 @@ def maintain_hll_store(
     def fold(batch: DataFrame, epoch_id: int) -> None:
         merge_batch_into_hll_store(batch, store_path, key_col, ts_col)
 
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .queryName("hll-register-store")
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
-    )
+    return fanout_sink(stream, [fold], checkpoint, "hll-register-store", trigger)
 
 
 def window_hll_estimate(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 from oltp_to_data_warehouse_pipeline_spark.streaming.windows import _with_watermark
 
 
@@ -77,7 +78,8 @@ def trending_topk_query(
     k: int = 3,
     available_now: bool = False,
 ) -> StreamingQuery:
-    """Start the streaming trending query (append mode + foreachBatch).
+    """Start the streaming trending query (append mode, through
+    :func:`streaming.multisink.fanout_sink`).
 
     Each micro-batch carries only windows the watermark just closed, each
     complete (module docstring), so the batch-local :func:`rank_topk` is
@@ -98,11 +100,5 @@ def trending_topk_query(
             f"{sink_path}/batch_id={epoch_id}"
         )
 
-    writer = (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    trigger = {"availableNow": True} if available_now else {"processingTime": "0 seconds"}
+    return fanout_sink(counts, [sink], checkpoint, trigger=trigger)

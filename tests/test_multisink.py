@@ -9,6 +9,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from oltp_to_data_warehouse_pipeline_spark.plans.incremental_agg import RollupSpec
+from oltp_to_data_warehouse_pipeline_spark.streaming import corpus, matview, sketchstore
 from oltp_to_data_warehouse_pipeline_spark.streaming.multisink import fanout_sink
 
 
@@ -113,3 +115,72 @@ def test_gated_sink_blocks_bad_batches_and_passes_good_ones(spark, tmp_path):
         q.processAllAvailable()
     q.stop()
     assert spark.read.parquet(out).count() == 2  # nothing landed
+
+
+def _persistent_rdds(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_starter_releases_its_cache_when_a_sink_fails(spark, tmp_path):
+    """The starter persists each batch for its sinks and releases it in a
+    ``finally``: a raising sink surfaces its error on the query and leaves
+    no cached RDD behind."""
+    src = tmp_path / "src"
+    src.mkdir()
+    _write(src, "b1.json", [{"k": "a", "v": 1.0}, {"k": "b", "v": 2.0}])
+
+    def failing_sink(batch, epoch_id):
+        batch.count()  # materializes the cached batch
+        raise RuntimeError("sink down")
+
+    before = _persistent_rdds(spark)
+    stream = spark.readStream.schema("k string, v double").json(str(src))
+    q = fanout_sink(stream, [failing_sink], str(tmp_path / "ckpt"))
+    with pytest.raises(Exception, match="sink down"):
+        q.awaitTermination(120)
+    q.stop()
+    assert _persistent_rdds(spark) <= before
+
+
+EVENTS = (
+    "event_id long, user_id long, value double, ts timestamp, "
+    "day string, amount double, doc_id long, text string"
+)
+
+
+def _event(i: int) -> dict:
+    day = f"2024-01-0{1 + i % 4}"
+    return {
+        "event_id": i, "user_id": i % 17, "value": float(i),
+        "ts": f"{day}T0{i % 9}:00:00", "day": day, "amount": float(i),
+        "doc_id": i, "text": f"document {i} on topic {i % 7}",
+    }
+
+
+STARTERS = {
+    "rollup": lambda s, out, ck: matview.maintain_rollup(
+        s, out, RollupSpec(keys=("day",), sums={"revenue": "amount"}), ck,
+        partition_key="day",
+    ),
+    "kmv": lambda s, out, ck: sketchstore.maintain_kmv_store(s, out, ck, k=8),
+    "qsample": lambda s, out, ck: sketchstore.maintain_qsample_store(s, out, ck, k=8),
+    "hll": lambda s, out, ck: sketchstore.maintain_hll_store(s, out, ck),
+    "corpus": lambda s, out, ck: corpus.ingest_documents(s, out, ck),
+}
+
+
+@pytest.mark.parametrize("starter", sorted(STARTERS))
+def test_every_starter_reads_each_record_once(spark, tmp_path, starter):
+    """Each source scan adds to ``numInputRows``, so a sink that re-ran its
+    source for a second action would report more rows than were added —
+    on the first batch and on a merge into the existing store alike."""
+    src = tmp_path / "src"
+    src.mkdir()
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    for run in range(2):
+        _write(src, f"b{run}.json", [_event(i) for i in range(40 * run, 40 * run + 40)])
+        stream = spark.readStream.schema(EVENTS).json(str(src))
+        q = STARTERS[starter](stream, out, ckpt)
+        q.awaitTermination(120)
+        assert q.exception() is None
+        assert sum(p["numInputRows"] for p in q.recentProgress) == 40
