@@ -170,7 +170,10 @@ def _route_microbatch(
         if "kafka_offset" in normalized.columns:
             order_cols.append("kafka_offset")
         sink(normalized, table, order_cols)
-        _save_schema(spark, registry_dir, topic, schema)
+        # rewrite only on change: the write is not atomic, so every
+        # needless rewrite is one more chance to leave a truncated registry
+        if schema != prior:
+            _save_schema(spark, registry_dir, topic, schema)
         written.append(table)
     return written
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -206,6 +207,19 @@ def test_clean_batches_leave_no_dead_letter_files(spark, tmp_path):
         process_microbatch(spark, spark.createDataFrame(rows, ["value", "topic"]), wh)
     assert read_upserted(spark, f"{wh}/users").count() == 2
     assert glob.glob(f"{wh}/_dead_letter/users/**/*.parquet", recursive=True) == []
+
+
+def test_unchanged_schema_leaves_the_registry_file_alone(spark, tmp_path):
+    """The registry is rewritten only when a batch changes the schema: the
+    write is not atomic, so every needless rewrite could truncate it."""
+    wh = str(tmp_path / "wh")
+    stats = []
+    for i in range(2):
+        rows = [(json.dumps({"id": str(i), "name": f"n{i}"}), "users")]
+        process_microbatch(spark, spark.createDataFrame(rows, ["value", "topic"]), wh)
+        st = os.stat(f"{wh}/_schema_users.json")
+        stats.append((st.st_ino, st.st_mtime_ns))
+    assert stats[0] == stats[1]
 
 
 def _persistent_rdds(spark) -> int:
