@@ -77,25 +77,29 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
         except Exception as e:  # noqa: BLE001 - audit must cover every query
             lines.append(f"| {name} | — | — | — | — | — | — | ERROR: {e} |")
             continue
+        # ``formatted`` lists every operator twice: once in the tree, once
+        # in the numbered details after the first blank line.  Count
+        # operators over the tree only; PushedFilters lives in the details.
+        tree = plan.split("\n\n", 1)[0]
         pushed = sorted(
             set(re.findall(r"PushedFilters: \[([^\]]+)\]", plan)) - {""}
         )
         pushed_s = "yes" if pushed else "—"
         notes = []
-        if "CartesianProduct" in plan:
+        if "CartesianProduct" in tree:
             notes.append("CARTESIAN")
-        if "mapInPandas" in plan or "MapInPandas" in plan:
+        if "mapInPandas" in tree or "MapInPandas" in tree:
             notes.append("arrow-batch python")
-        if "LocalTableScan" in plan:
+        if "LocalTableScan" in tree:
             notes.append("local")
         lines.append(
             "| {} | {} | {} | {} | {} | {} | {} | {} |".format(
                 name,
-                plan.count("BroadcastHashJoin"),
-                plan.count("SortMergeJoin"),
-                plan.count("ShuffledHashJoin"),
-                plan.count("BroadcastNestedLoopJoin"),
-                plan.count("Exchange"),
+                tree.count("BroadcastHashJoin"),
+                tree.count("SortMergeJoin"),
+                tree.count("ShuffledHashJoin"),
+                tree.count("BroadcastNestedLoopJoin"),
+                tree.count("Exchange"),
                 pushed_s,
                 " ".join(notes),
             )
