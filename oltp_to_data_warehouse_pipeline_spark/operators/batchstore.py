@@ -41,8 +41,9 @@ Tombstones (takedown / right-to-be-forgotten):
 
 - ``delete_docs(path, ids, id_col)`` appends ids to ``<path>/_tombstones``
   (hidden from the store's own parquet read).  ``read_batches`` /
-  ``apply_tombstones`` anti-join them (broadcast — takedown lists are
-  request-scale, not corpus-scale), so filtering is immediate;
+  ``apply_tombstones`` anti-join them (the planner broadcasts the list
+  while it is small, as takedown lists usually are), so filtering is
+  immediate;
   ``compact`` excises the rows physically and, once no un-compacted
   partition remains, clears the tombstone list itself.
 - Semantics are FORGET: after takedown the document neither appears in
@@ -136,7 +137,9 @@ def tombstones(spark: SparkSession, path: str, id_col: str) -> DataFrame | None:
 def apply_tombstones(
     df: DataFrame, spark: SparkSession, path: str, id_col: str
 ) -> DataFrame:
-    """Anti-join the store's tombstones (broadcast; no-op without any).
+    """Anti-join the store's tombstones (no-op without any).  The join
+    strategy is the planner's: a takedown list is request-scale, so it
+    broadcasts by size, but nothing forces it.
     When ``df`` carries ``batch_id``, only rows at or below each
     tombstone's horizon are filtered; a flat frame (no batch_id) is
     treated as fully covered."""
@@ -147,7 +150,7 @@ def apply_tombstones(
     cond = df[id_col] == t["__tomb_id"]
     if "batch_id" in df.columns:
         cond = cond & (df["batch_id"] <= t["upto"])
-    return df.join(F.broadcast(t), cond, "left_anti")
+    return df.join(t, cond, "left_anti")
 
 
 def check_no_pending_compact(spark: SparkSession, path: str) -> None:

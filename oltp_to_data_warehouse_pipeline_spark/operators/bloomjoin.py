@@ -55,7 +55,6 @@ def bloom_semi_join(
     build_key: str | None = None,
     num_bits: int = 1 << 17,
     num_hashes: int = 2,
-    broadcast_exact: bool = False,
     materialize_build: bool = False,
 ) -> DataFrame:
     """Semi join ``probe`` against ``build``'s keys with bloom pre-pruning.
@@ -64,10 +63,12 @@ def bloom_semi_join(
     bit-identical to ``probe.join(build, key, "semi")`` (the coarse phase
     admits false positives only, and the exact phase removes them).
 
-    ``broadcast_exact`` opts the final verify into a broadcast hash join —
-    correct only when the build keys genuinely fit in memory; the default
-    leaves the strategy to Catalyst/AQE, which is the honest choice for
-    the non-broadcastable build sides this operator exists for.
+    Every join strategy here is the planner's.  A bit relation holds at
+    most ``num_bits`` rows, so it broadcasts under the session threshold
+    (or, when its estimate inherits a large build's size, AQE switches it
+    to a broadcast once the bit stage has run).  The exact verify
+    broadcasts only when the build keys are small; the large build sides
+    this operator exists for sort-merge.
 
     The build side is scanned ``num_hashes + 1`` times (once per bit
     relation + once for the exact keys) — the same re-scan Spark's own
@@ -97,12 +98,11 @@ def bloom_semi_join(
         ).distinct()
         pruned = (
             pruned.withColumn("__bf_probe", bloom_bit(F.col(probe_key), h, num_bits))
-            .join(F.broadcast(bits_h), F.col("__bf_probe") == F.col("__bf_bit"), "semi")
+            .join(bits_h, F.col("__bf_probe") == F.col("__bf_bit"), "semi")
             .drop("__bf_probe")
         )
 
-    exact_build = F.broadcast(keys) if broadcast_exact else keys
-    return pruned.join(exact_build, F.col(probe_key) == F.col("__bf_key"), "semi")
+    return pruned.join(keys, F.col(probe_key) == F.col("__bf_key"), "semi")
 
 
 def coarse_survivor_stats(
@@ -127,14 +127,14 @@ def coarse_survivor_stats(
         hit_h = F.col("__bf_bit").isNotNull().cast("int")
         marked = (
             marked.withColumn("__p", bloom_bit(F.col("k"), h, num_bits))
-            .join(F.broadcast(bits_h), F.col("__p") == F.col("__bf_bit"), "left")
+            .join(bits_h, F.col("__p") == F.col("__bf_bit"), "left")
             .withColumn(f"__hit{h}", hit_h)
             .drop("__p", "__bf_bit")
         )
     coarse = F.expr(" AND ".join(f"__hit{h} = 1" for h in range(num_hashes))).cast("int")
     exact = F.col("__member").isNotNull().cast("int")
     marked = marked.join(
-        F.broadcast(keys.withColumn("__member", F.lit(1))),
+        keys.withColumn("__member", F.lit(1)),
         F.col("k") == F.col("__bf_key"),
         "left",
     )

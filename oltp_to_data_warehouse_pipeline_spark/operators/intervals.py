@@ -111,7 +111,7 @@ def concurrency_timeline(
     offsets = totals.withColumn(
         "__off", F.coalesce(F.sum("__tot").over(w_b), F.lit(0))
     ).select("__b", "__off")
-    return run.join(F.broadcast(offsets), "__b").select(
+    return run.join(offsets, "__b").select(
         "ts", (F.col("__off") + F.col("__run")).cast("bigint").alias("concurrent")
     )
 

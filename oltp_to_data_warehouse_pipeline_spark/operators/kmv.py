@@ -135,7 +135,7 @@ def kmv_sketch_rows(
     if trows:
         lt = spark.createDataFrame(trows, active.schema)
         survivors = (
-            _ns_join(raw, F.broadcast(lt), group_cols, "left")
+            _ns_join(raw, lt, group_cols, "left")
             .where(F.col("h") < F.coalesce(F.col("__t"), F.lit(HASH_SPACE)))
             .select(*group_cols, "h")
             .distinct()
@@ -158,7 +158,7 @@ def kmv_sketch_rows(
         )
         w = Window.partitionBy(*group_cols).orderBy("h")
         resc = collect_bounded(
-            _ns_join(raw, F.broadcast(la), group_cols, "left_semi")
+            _ns_join(raw, la, group_cols, "left_semi")
             .select(*group_cols, "h")
             .distinct()
             .withColumn("__r", F.row_number().over(w))
@@ -183,7 +183,6 @@ def kmv_sketch(
     k: int = 64,
     prefilter: bool = True,
     pin: bool = True,
-    bounded_groups: bool = True,
 ) -> DataFrame:
     """``(group…, h)`` — the ≤ k smallest distinct key hashes per group.
 
@@ -204,18 +203,13 @@ def kmv_sketch(
     set try :func:`kmv_sketch_rows` first, which returns the same sketch
     as driver-held rows when it fits the shared driver bound.
 
-    ``bounded_groups`` gates the distributed path's broadcast hints on
-    the GROUP-cardinality-bounded relations (thresholds, survivor counts,
-    audit groups — all "one row per group"; round-11 verdict: a forced
-    broadcast is a driver-OOM cliff when ``group_cols`` is
-    high-cardinality, exactly where the old SortMergeJoin merely
-    crawled).  Leave True when the group count is bounded by
-    construction (days, cohorts, quarters); set False for unbounded
-    group domains — the planner then picks the join from its own size
-    estimates (shuffle join on checkpoint-derived inputs).
+    Precondition: the group domain is bounded.  The distributed build
+    broadcasts two one-row-per-group relations (survivor counts, audit
+    groups) that the planner cannot size, so every caller groups by a
+    calendar key (day, year, quarter/month); a high-cardinality
+    ``group_cols`` would force both through the driver.
     """
     g = [F.col(c) for c in group_cols]
-    bhint = F.broadcast if bounded_groups else (lambda d: d)
     raw = df.where(F.col(key).isNotNull()).select(*g, kmv_hash(key).alias("h"))
     if prefilter:
         # Coarse: per-group HLL estimate -> hash admission threshold.
@@ -238,7 +232,7 @@ def kmv_sketch(
         if pin:
             thresholds = thresholds.localCheckpoint(eager=True)
         survivors = (
-            _ns_join(raw, bhint(thresholds), group_cols, "inner")
+            _ns_join(raw, thresholds, group_cols, "inner")
             .where(F.col("h") < F.col("__t"))
             .select(*group_cols, "h")
             .distinct()
@@ -253,17 +247,16 @@ def kmv_sketch(
         # counts — starting from survivors would silently DROP a group
         # whose every hash landed above its threshold (zero survivors ⇒ no
         # groupBy row ⇒ neither kept nor rescued; md5_fold48 and the HLL
-        # sizer hash differently, so such inputs exist).  Both joins
-        # broadcast.  At rsd 2% the rescue branch is empty; it exists so
-        # the equality with the plain formulation is structural, not
-        # probabilistic.
+        # sizer hash differently, so such inputs exist).  At rsd 2% the
+        # rescue branch is empty; it exists so the equality with the plain
+        # formulation is structural, not probabilistic.
         audit = (
             _ns_join(
                 thresholds,
-                # one row per group, but checkpoint-derived (unknown size
-                # estimate) — without the hint the planner sort-merges two
-                # group-count relations (round-11 plan audit)
-                bhint(
+                # survivors is a pinned join, so the planner sizes this
+                # aggregate at the join's product and would sort-merge it
+                # bounded: one row per group; every caller groups by a calendar key
+                F.broadcast(
                     survivors.groupBy(*g).agg(F.count(F.lit(1)).alias("__nsurv"))
                 ),
                 group_cols,
@@ -275,9 +268,11 @@ def kmv_sketch(
             )
             .select(*group_cols)
         )
-        kept = _ns_join(survivors, bhint(audit), group_cols, "left_anti")
+        # bounded: one row per group; every caller groups by a calendar key
+        kept = _ns_join(survivors, F.broadcast(audit), group_cols, "left_anti")
         rescued = (
-            _ns_join(raw, bhint(audit), group_cols, "left_semi")
+            # bounded: one row per group; every caller groups by a calendar key
+            _ns_join(raw, F.broadcast(audit), group_cols, "left_semi")
             .select(*group_cols, "h")
             .distinct()
         )
@@ -342,14 +337,9 @@ def kmv_intersect_estimate(
     union = ua.select("h").unionByName(ub.select("h")).distinct()
     w = Window.orderBy("h")  # ≤ 2k rows: single-partition by design
     ranked = union.withColumn("__r", F.row_number().over(w)).where(F.col("__r") <= k)
-    # Explicit broadcast: the sketches are ≤ k rows by construction, but
-    # they usually arrive as localCheckpoint output (Scan ExistingRDD),
-    # whose unknown size estimate makes the planner fall back to
-    # SortMergeJoin — 3 exchanges + 3 sorts for two k-row joins
-    # (round-11 plan audit: kmv_cohort_overlap_sketch).
     marked = (
-        ranked.join(F.broadcast(ua.select("h", "__a")), "h", "left")
-        .join(F.broadcast(ub.select("h", "__b")), "h", "left")
+        ranked.join(ua.select("h", "__a"), "h", "left")
+        .join(ub.select("h", "__b"), "h", "left")
     )
     agg = marked.agg(
         F.count(F.lit(1)).alias("union_m"),

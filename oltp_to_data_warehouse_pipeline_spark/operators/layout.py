@@ -86,7 +86,7 @@ def with_zvalue(
                 for n, f in (("min", F.min), ("max", F.max))
             ]
         )
-    j = df.crossJoin(F.broadcast(bounds))
+    j = df.crossJoin(bounds)
     parts = [
         scaled(F.col(c), F.col(f"__min_{c}"), F.col(f"__max_{c}"), bits) for c in cols
     ]

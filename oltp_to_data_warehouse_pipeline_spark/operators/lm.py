@@ -94,7 +94,7 @@ def bigram_lm_scores(
     model = c2.join(c1, "k1")
     scored = (
         big.join(model, ["k1", "k2"])
-        .crossJoin(F.broadcast(vocab))
+        .crossJoin(vocab)
         .select("id", lp.alias("lp"))
     )
     h = -F.col("__s").cast("double") / F.col("n_bigrams")
@@ -163,7 +163,7 @@ def lm_quality_gate(
         F.sum(F.col("hs") * F.col("cnt")).alias("hsum"),
         F.sum("cnt").alias("n"),
     )
-    tagged = cells.crossJoin(F.broadcast(tot))
+    tagged = cells.crossJoin(tot)
     slack_scaled = int(round(slack_bits * 10000))
     is_tail = (F.col("hs") * F.col("n")) > (
         F.col("hsum") + F.lit(slack_scaled) * F.col("n")

@@ -11,14 +11,16 @@ count), so writers, appenders and probers can never disagree about key
 geometry.
 
 Probe plan (the part that must be right at scale): the INCREMENT's band
-keys are computed inline and explicitly ``broadcast()``; the candidate
-join then streams the INDEX past the broadcast build — the historical
-index is scanned (two columns, band+key pushed through parquet column
-pruning) but NEVER shuffled, so probe cost is one index scan + a
-broadcast hash join sized by the increment, independent of how the index
-is partitioned on disk.  A shuffle-side alternative (co-bucketed tables)
-only pays when increments outgrow broadcast size — at that point the
-"increment" is a corpus and the inline self-join path is the right tool.
+keys are computed inline and joined to the index with no hint; while the
+increment sits under the session's broadcast threshold the planner
+broadcasts it, and the candidate join streams the INDEX past the
+broadcast build — the historical index is scanned (two columns, band+key
+pushed through parquet column pruning) but NEVER shuffled, so probe cost
+is one index scan + a broadcast hash join sized by the increment,
+independent of how the index is partitioned on disk.  An increment past
+the threshold sort-merges instead of forcing a broadcast; at that point
+the "increment" is a corpus and the inline self-join path is the right
+tool.
 
 Verification: `probe_verified` joins the candidate pairs back to both
 texts and computes EXACT shingle Jaccard (array_intersect over the
@@ -213,7 +215,7 @@ def lsh_probe(
     index = batchstore.apply_tombstones(index, spark, path, "doc")
     index = index.select(F.col("doc").alias("index_id"), "band", "key")
     return (
-        index.join(F.broadcast(probe), ["band", "key"])
+        index.join(probe, ["band", "key"])
         .where(F.col("probe_id") != F.col("index_id"))
         .select("probe_id", "index_id")
         .distinct()
@@ -250,7 +252,7 @@ def lsh_probe_verified(
     p_txt = new_docs.select(
         F.col(id_col).alias("probe_id"), F.col(text_col).alias("__ptext")
     )
-    # candidates ⋈ increment texts: both increment-sized → broadcast build
+    # candidates ⋈ increment texts: both increment-sized
     build = cand.join(p_txt, "probe_id")
     c_txt = corpus.select(
         F.col(id_col).alias("index_id"), F.col(text_col).alias("__ctext")
@@ -258,7 +260,7 @@ def lsh_probe_verified(
     inter = F.size(F.array_intersect("__psh", "__csh"))
     union = F.size("__psh") + F.size("__csh") - inter
     return (
-        c_txt.join(F.broadcast(build), "index_id")
+        c_txt.join(build, "index_id")
         # shingle columns projected AFTER the join — computed once per
         # matched row, never for unmatched corpus rows
         .withColumn("__psh", word_shingles(F.col("__ptext"), n))

@@ -132,7 +132,7 @@ def qsample_sketch_rows(
     if trows:
         lt = spark.createDataFrame(trows, active.schema)
         survivors = (
-            _ns_join(raw, F.broadcast(lt), group_cols, "left")
+            _ns_join(raw, lt, group_cols, "left")
             .where(F.col("h") < F.coalesce(F.col("__t"), F.lit(HASH_SPACE)))
             .select(*group_cols, "h", "v")
         )
@@ -162,7 +162,7 @@ def qsample_sketch_rows(
         la = spark.createDataFrame(audit, active.select(*group_cols).schema)
         resc = collect_bounded(
             _bottom_k(
-                _ns_join(raw, F.broadcast(la), group_cols, "left_semi").select(
+                _ns_join(raw, la, group_cols, "left_semi").select(
                     *group_cols, "h", "v"
                 ),
                 group_cols,
@@ -187,7 +187,6 @@ def qsample_sketch(
     k: int = 256,
     prefilter: bool = True,
     pin: bool = True,
-    bounded_groups: bool = True,
 ) -> DataFrame:
     """Build per-group bottom-k row samples: ``group_cols + (h, v)``,
     ≤ k rows per group.  ``key_col`` must uniquely identify a row within
@@ -210,15 +209,16 @@ def qsample_sketch(
     the prefilter/plain structural equality AND diverge from the oracle's
     NULLS-LAST ordering.
 
-    ``bounded_groups``: the broadcast-hint gate for unbounded group
-    domains, same contract as :func:`operators.kmv.kmv_sketch`.  The
-    distributed build always runs here; callers with a bounded group set
-    try :func:`qsample_sketch_rows` first, which returns the same sketch
-    as driver-held rows when it fits the shared driver bound.
+    The distributed build always runs here; callers with a bounded group
+    set try :func:`qsample_sketch_rows` first, which returns the same
+    sketch as driver-held rows when it fits the shared driver bound.
+    Precondition, as for :func:`operators.kmv.kmv_sketch`: the group
+    domain is bounded.  Two one-row-per-group relations (survivor counts,
+    audit groups) are broadcast, so every caller groups by a calendar key
+    (day, quarter/month).
     """
     g = [F.col(c) for c in group_cols]
     ok = F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
-    bhint = F.broadcast if bounded_groups else (lambda d: d)
     raw = df.where(ok).select(
         *g, qs_hash(key_col).alias("h"), F.col(value_col).alias("v")
     )
@@ -241,7 +241,7 @@ def qsample_sketch(
     if pin:
         thresholds = thresholds.localCheckpoint(eager=True)
     survivors = (
-        _ns_join(raw, bhint(thresholds), group_cols, "inner")
+        _ns_join(raw, thresholds, group_cols, "inner")
         .where(F.col("h") < F.col("__t"))
         .select(*group_cols, "h", "v")
     )
@@ -255,9 +255,10 @@ def qsample_sketch(
     audit = (
         _ns_join(
             thresholds,
-            # one row per group, checkpoint-derived (unknown size
-            # estimate): hint keeps the audit off SortMergeJoin
-            bhint(
+            # survivors is a pinned join, so the planner sizes this
+            # aggregate at the join's product and would sort-merge it
+            # bounded: one row per group; every caller groups by a calendar key
+            F.broadcast(
                 survivors.groupBy(*g).agg(F.count(F.lit(1)).alias("__nsurv"))
             ),
             group_cols,
@@ -269,8 +270,10 @@ def qsample_sketch(
         )
         .select(*group_cols)
     )
-    kept = _ns_join(survivors, bhint(audit), group_cols, "left_anti")
-    rescued = _ns_join(raw, bhint(audit), group_cols, "left_semi").select(
+    # bounded: one row per group; every caller groups by a calendar key
+    kept = _ns_join(survivors, F.broadcast(audit), group_cols, "left_anti")
+    # bounded: one row per group; every caller groups by a calendar key
+    rescued = _ns_join(raw, F.broadcast(audit), group_cols, "left_semi").select(
         *group_cols, "h", "v"
     )
     return _bottom_k(kept.unionByName(rescued), group_cols, k)

@@ -6,9 +6,10 @@ Brute-force cosine top-k as the exact baseline, and an LSH-bucketed variant
 Python in the loop.  For very wide vectors (≥1k dims) a pandas_udf batch dot
 product can be swapped in; at 64-dim the HOF form wins (no Arrow transfer).
 
-Scale posture: queries are broadcast (top-k is usually few-queries ×
-many-candidates); candidates never shuffle for the brute-force path.  The
-LSH variant turns the cross join into an equi-join on bucket signatures.
+Scale posture: the query set is LIMIT-bounded (top-k is usually
+few-queries × many-candidates), so the planner broadcasts it and
+candidates never shuffle for the brute-force path.  The LSH variant turns
+the cross join into an equi-join on bucket signatures.
 """
 
 from __future__ import annotations
@@ -132,7 +133,8 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest candidates.
 
-    ``queries`` is broadcast; candidates stream past it (one narrow stage),
+    ``queries`` (``max_queries``-bounded) is the broadcast side the planner
+    picks by size; candidates stream past it (one narrow stage),
     then a per-query top-k via window row_number (shuffle keyed by query id —
     small, = |queries| keys; for many queries switch the final ranking to a
     per-partition heap via mapInPandas).
@@ -144,8 +146,8 @@ def cosine_topk(
     the LSH/IVF paths for real many-query workloads).
 
     ``probe=False`` keeps the bound structural-only (a plain
-    ``limit(max_queries)`` — still a GlobalLimit feeding the broadcast, so
-    the plan can never see an unbounded build) but skips ``bounded()``'s
+    ``limit(max_queries)`` — still a GlobalLimit under the join, so the
+    planner sizes the build side from the limit) but skips ``bounded()``'s
     eager materialize-and-count, so constructing the plan runs NO Spark
     jobs and pins nothing.  For lazy registration surfaces
     (plans/sql_surface.py) where the caller already limited the query set;
@@ -166,7 +168,7 @@ def cosine_topk(
     ).withColumn("__qnorm", l2_norm(F.col("__qvec")))
 
     scored = (
-        cand.crossJoin(F.broadcast(q))
+        cand.crossJoin(q)
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("sim", dot(F.col("__qvec"), F.col("__cvec")) / (F.col("__qnorm") * F.col("__cnorm")))
     )
@@ -221,7 +223,7 @@ def ann_topk_lsh(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qraw"), "bucket"
     )
     scored = (
-        cand.join(F.broadcast(q), "bucket")
+        cand.join(q, "bucket")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("__qvec", as_double_vec("__qraw"))
         .withColumn("__cvec", as_double_vec("__craw"))
@@ -264,7 +266,7 @@ def cosine_near_dup_pairs(
     )
     a, b = base.alias("a"), base.alias("b")
     return (
-        a.join(F.broadcast(b), F.col("a.id") < F.col("b.id"))
+        a.join(b, F.col("a.id") < F.col("b.id"))
         .withColumn("sim", dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n")))
         .where(F.col("sim") >= threshold)
         .select(
@@ -431,7 +433,7 @@ def cosine_near_dup_lsh(
         F.col(id_col).alias("id"), F.posexplode(vec).alias("pos", "x")
     )
     dots = (
-        sv.join(F.broadcast(pw), "pos")
+        sv.join(pw, "pos")
         .groupBy("id", "plane")
         .agg(F.sum(F.col("x") * F.col("w")).alias("d"))
     )
@@ -1044,7 +1046,7 @@ def _probe_cells_topk(
         .withColumn("__qnorm", l2_norm(F.col("__qvec")))
     )
     scored = (
-        cand.join(F.broadcast(q), "cell")
+        cand.join(q, "cell")
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn("__cnorm", l2_norm(F.col("__cvec")))
         .withColumn(
@@ -1140,7 +1142,7 @@ def cosine_topk_rerank(
     qnorm = l2_norm(F.col("__qq"))
     cnorm = l2_norm(F.col("__cq"))
     coarse = (
-        cand.crossJoin(F.broadcast(q))
+        cand.crossJoin(q)
         .where(F.col("neighbor_id") != F.col("query_id"))
         .withColumn(
             "coarse",
@@ -1168,7 +1170,7 @@ def cosine_topk_rerank(
     )
     exact = (
         survivors.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
+        .join(qv, "query_id")
         .withColumn("sim", dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn")))
     )
     wk = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))

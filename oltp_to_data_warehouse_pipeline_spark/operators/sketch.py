@@ -85,7 +85,7 @@ def _with_estimate(
             F.col("cell").alias(f"__cell{j}"), F.col("c").alias(f"__c{j}")
         )
         out = out.withColumn(f"__probe{j}", cms_cell(F.col(key), j, width)).join(
-            F.broadcast(cj), F.col(f"__probe{j}") == F.col(f"__cell{j}"), "left"
+            cj, F.col(f"__probe{j}") == F.col(f"__cell{j}"), "left"
         )
     est = F.least(*[F.coalesce(F.col(f"__c{j}"), F.lit(0)) for j in range(depth)])
     drop = [c for j in range(depth) for c in (f"__probe{j}", f"__cell{j}", f"__c{j}")]

@@ -73,7 +73,7 @@ def skew_profile(df: DataFrame, key_cols: list[str], top_n: int = 20) -> DataFra
         F.sum("n_rows").alias("__total"), F.count(F.lit(1)).alias("__keys")
     )
     return (
-        counts.crossJoin(F.broadcast(totals))
+        counts.crossJoin(totals)
         .select(
             *key_cols,
             "n_rows",

@@ -129,7 +129,7 @@ def bootstrap_mean_ci(
     full = means.where(F.col("r") == -1).select(
         F.col("nw").alias("n_rows"), F.col("m").alias("mean")
     )
-    return full.crossJoin(F.broadcast(pick)).select(
+    return full.crossJoin(pick).select(
         "n_rows",
         (F.round("mean", 4) + F.lit(0.0)).alias("mean_value"),
         (F.round("lo", 4) + F.lit(0.0)).alias("ci_lo"),

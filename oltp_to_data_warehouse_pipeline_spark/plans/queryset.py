@@ -270,9 +270,9 @@ def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     joined = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
+        .join(r, n["n_regionkey"] == r["r_regionkey"])
     )
     return joined.rollup(
         F.col("r_name").alias("region"), F.col("n_name").alias("nation")
@@ -851,11 +851,11 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
         .join(
-            F.broadcast(s),
+            s,
             (li["l_suppkey"] == s["s_suppkey"]) & (c["c_nationkey"] == s["s_nationkey"]),
         )
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        .join(n, s["s_nationkey"] == n["n_nationkey"])
+        .join(r, n["n_regionkey"] == r["r_regionkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.round(F.sum(_rev_dec()), 2).cast("double").alias("revenue"))
     )
@@ -2519,7 +2519,7 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        li.join(p, li.l_partkey == p.p_partkey)
         .agg(
             F.round(
                 F.lit(100.0)
@@ -2578,8 +2578,8 @@ def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape: HAVING on a grouped sum, then re-join the survivors
     to their order/customer attributes.  Scale: aggregate lineitem FIRST
     (one shuffle on l_orderkey), filter to the tiny qualifying set, and only
-    then join — the qualifying keys broadcast to orders, so the wide tables
-    never co-shuffle."""
+    then join — the qualifying set is small enough for the planner to
+    broadcast a side of each join, so the wide tables never co-shuffle."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (
         li.groupBy("l_orderkey")
@@ -2589,8 +2589,8 @@ def large_order_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     return (
-        o.join(F.broadcast(big), o.o_orderkey == big.l_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(big, o.o_orderkey == big.l_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .select(
             "c_name",
             "o_orderkey",
@@ -2621,7 +2621,7 @@ def disjunctive_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans prune before the broadcast join evaluates the full disjunction."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+    j = li.join(p, li.l_partkey == p.p_partkey)
     q, s, b = F.col("l_quantity"), F.col("p_size"), F.col("p_brand")
     cond = (
         ((b == "Brand#3") & q.between(1, 11) & s.between(1, 5))
@@ -2670,14 +2670,14 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     j = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cust_nation), c.c_nationkey == F.col("cn.n_nationkey"))
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(cust_nation, c.c_nationkey == F.col("cn.n_nationkey"))
         .join(
-            F.broadcast(r.filter(F.col("r_name") == "ASIA")),
+            r.filter(F.col("r_name") == "ASIA"),
             F.col("cn.n_regionkey") == r.r_regionkey,
         )
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(supp_nation), s.s_nationkey == F.col("sn.n_nationkey"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(supp_nation, s.s_nationkey == F.col("sn.n_nationkey"))
     )
     return (
         j.groupBy(F.year("o_orderdate").cast("bigint").alias("o_year"))
@@ -2725,9 +2725,9 @@ def product_profit_by_nation_year(spark: SparkSession, sf_dir: str) -> DataFrame
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        li.join(p, li.l_partkey == p.p_partkey)
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .join(o, li.l_orderkey == o.o_orderkey)
     )
     return j.groupBy(
@@ -2769,8 +2769,8 @@ def returned_item_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     j = (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
     )
     return j.groupBy(F.col("n_name").alias("nation")).agg(
         F.round(F.sum(_rev_dec()), 2).cast("double").alias("lost_revenue"),
@@ -2804,7 +2804,7 @@ def small_quantity_part_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("p_brand") == "Brand#23")
         .select("p_partkey")
     )
-    pruned = li.join(F.broadcast(p23), li.l_partkey == p23.p_partkey, "left_semi")
+    pruned = li.join(p23, li.l_partkey == p23.p_partkey, "left_semi")
     w = Window.partitionBy("l_partkey")
     flagged = pruned.withColumn("qty_thr", F.lit(0.2) * F.avg("l_quantity").over(w))
     return (
@@ -2842,7 +2842,7 @@ def balance_opportunity_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     kept = (
         c.join(recent, c.c_custkey == recent.o_custkey, "left_anti")
-        .crossJoin(F.broadcast(pos_avg))
+        .crossJoin(pos_avg)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
     )
     return kept.groupBy(F.col("c_mktsegment").alias("segment")).agg(
@@ -2947,7 +2947,7 @@ def customer_order_years(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderdate")
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        o.join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_custkey")
         .agg(
             F.array_join(
@@ -3149,7 +3149,7 @@ def benchmark_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = sh.where(F.col("doc_id") % 97 == 0).select("sh").distinct()
     corpus = sh.where(F.col("doc_id") % 97 != 0)
     return (
-        corpus.join(F.broadcast(bench), "sh")
+        corpus.join(bench, "sh")
         .groupBy("doc_id")
         .agg(F.countDistinct("sh").alias("n_hit_shingles"))
     )
@@ -3236,10 +3236,10 @@ def nation_trade_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) | ((F.col("supp_nation") == "NATION_2") & (F.col("cust_nation") == "NATION_1"))
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("s_nk"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("c_nk"))
+        .join(s, li.l_suppkey == s.s_suppkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n1, F.col("s_nationkey") == F.col("s_nk"))
+        .join(n2, F.col("c_nationkey") == F.col("c_nk"))
         .where(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
         .agg(F.round(F.sum(_rev_dec()), 2).cast("double").alias("revenue"))
@@ -3274,13 +3274,13 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_suppkey", "s_name")
         .agg(F.round(F.sum(_rev_dec()), 2).cast("double").alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("__mx"))
     return (
-        rev.join(F.broadcast(mx), rev.total_revenue == mx.__mx)
+        rev.join(mx, rev.total_revenue == mx.__mx)
         .select("s_suppkey", "s_name", "total_revenue")
     )
 
@@ -3333,7 +3333,7 @@ def suppliers_sole_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         scoped.where((F.col("late") == 1) & (F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy("s_name")
         .agg(F.count("*").alias("n_orders"))
         .orderBy(F.desc("n_orders"), F.asc("s_name"))
@@ -3531,7 +3531,7 @@ def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ps = (
         li.select("l_partkey", "l_suppkey", "l_extendedprice")
-        .join(F.broadcast(scope), F.col("l_partkey") == F.col("p_partkey"))
+        .join(scope, F.col("l_partkey") == F.col("p_partkey"))
         .repartition("l_partkey")
         .groupBy("l_partkey", "p_brand", "l_suppkey")
         .agg(F.min("l_extendedprice").alias("supply_cost"))
@@ -3540,8 +3540,8 @@ def part_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ps.withColumn("best", best)
         .where(F.col("supply_cost") == F.col("best"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .select(
             "s_acctbal",
             "s_name",
@@ -3610,7 +3610,7 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
         )
         .select("l_partkey", "l_suppkey", "l_quantity")
-        .join(F.broadcast(scope), F.col("l_partkey") == F.col("p_partkey"))
+        .join(scope, F.col("l_partkey") == F.col("p_partkey"))
         .repartition("l_partkey")
         .groupBy("l_partkey", "l_suppkey")
         .agg(
@@ -3630,8 +3630,8 @@ def dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        dom.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
+        dom.join(s, F.col("l_suppkey") == F.col("s_suppkey"))
+        .join(n, F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_name", "n_name", "parts_dominated", "dominated_qty")
         .orderBy("s_name")
     )
@@ -3885,8 +3885,8 @@ def doc_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would re-scan and re-tokenize the whole corpus for one number.
     totals = counts.agg(F.sum("c").alias("n"))
     return (
-        tok.join(F.broadcast(vocab), "tok", "left")
-        .crossJoin(F.broadcast(totals))
+        tok.join(vocab, "tok", "left")
+        .crossJoin(totals)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_tokens"),
@@ -4105,7 +4105,7 @@ def doc_idf_rarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = d.agg(F.count("*").alias("nd"))
     return (
         tok.join(dfreq, "tok")
-        .crossJoin(F.broadcast(nd))
+        .crossJoin(nd)
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_distinct_tokens"),
@@ -4727,7 +4727,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot_rel = base.agg(F.count(F.lit(1)).cast("bigint").alias("__k"))
     return (
-        scored.crossJoin(F.broadcast(tot_rel))
+        scored.crossJoin(tot_rel)
         .select(
             "custkey",
             "frequency",
@@ -4778,8 +4778,8 @@ def nation_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     x = F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01"))
     return (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.regr_count(F.col("o_totalprice"), x).cast("bigint").alias("n_orders"),
@@ -5112,12 +5112,12 @@ def event_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event table is never shuffled."""
     e = load_table(spark, sf_dir, "events").select("event_type", "value")
     med = e.groupBy("event_type").agg(F.median("value").alias("med"))
-    dev = e.join(F.broadcast(med), "event_type").withColumn(
+    dev = e.join(med, "event_type").withColumn(
         "dev", F.abs(F.col("value") - F.col("med"))
     )
     mad = dev.groupBy("event_type").agg(F.median("dev").alias("mad"))
     return (
-        dev.join(F.broadcast(mad), "event_type")
+        dev.join(mad, "event_type")
         .groupBy("event_type", "med", "mad")
         .agg(
             F.count_if(F.col("dev") > 3 * 1.4826 * F.col("mad"))
@@ -5198,7 +5198,7 @@ def event_value_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("te").alias("tmin"),
         F.max("te").alias("tmax"),
     )
-    binned = e.crossJoin(F.broadcast(stats)).select(
+    binned = e.crossJoin(stats).select(
         "event_type",
         F.when(
             F.col("vmax") > F.col("vmin"),
@@ -5258,7 +5258,7 @@ def _brand_cooccurrence_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
     baskets = (
-        li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
+        li.join(p, li["l_partkey"] == p["p_partkey"])
         .repartition(spark.sparkContext.defaultParallelism, "l_orderkey")
         .groupBy(F.col("l_orderkey").alias("ok"))
         .agg(F.sort_array(F.collect_set("p_brand")).alias("bs"))
@@ -5352,9 +5352,9 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ba = bc.select(F.col("brand_a"), F.col("cnt").alias("na_"))
     bb = bc.select(F.col("brand_a").alias("brand_b"), F.col("cnt").alias("nb_"))
     return (
-        pairs.crossJoin(F.broadcast(n))
-        .join(F.broadcast(ba), "brand_a")
-        .join(F.broadcast(bb), "brand_b")
+        pairs.crossJoin(n)
+        .join(ba, "brand_a")
+        .join(bb, "brand_b")
         .select(
             "brand_a",
             "brand_b",
@@ -5391,9 +5391,9 @@ def _brand_affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cnt").alias("n_ab"),
     )
     return (
-        pairs.crossJoin(F.broadcast(n))
-        .join(F.broadcast(bc.withColumnsRenamed({"b": "ea", "nb": "na_"})), "ea")
-        .join(F.broadcast(bc.withColumnsRenamed({"b": "eb", "nb": "nb_"})), "eb")
+        pairs.crossJoin(n)
+        .join(bc.withColumnsRenamed({"b": "ea", "nb": "na_"}), "ea")
+        .join(bc.withColumnsRenamed({"b": "eb", "nb": "nb_"}), "eb")
         .where(
             F.col("n_ab").cast("decimal(38,0)") * F.col("n_orders")
             > F.col("na_").cast("decimal(38,0)") * F.col("nb_")
@@ -5466,10 +5466,10 @@ def brand_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed |brands|²-row relation brand_affinity_lift consumes);
     everything here — edge filter, triangle self-joins, degree/triangle
     rollups — runs over vocabulary-sized relations: the edge set gets its
-    own eager barrier (five consumers), the triangle joins broadcast their
-    bounded build sides (checkpoint-derived relations carry no size stats,
-    so Spark would otherwise SortMergeJoin rows it could hash in L1), and
-    the final brand ordering is coalesce(1)+sortWithinPartitions — a
+    own eager barrier (five consumers), the triangle joins are left to the
+    planner (the pinned edge set keeps a join's size estimate, so they
+    sort-merge; broadcast hints saved no CPU at sf0.1), and the final
+    brand ordering is coalesce(1)+sortWithinPartitions — a
     global sort exchange on a |brands|-row output buys nothing.  At web scale the
     node-iterator join is bounded by Σ deg² of a |brands|-node graph, not
     by order volume; for graphs with heavy-tailed degrees you would orient
@@ -5481,12 +5481,7 @@ def brand_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     e1 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("b"))
     e2 = edges.select(F.col("ea").alias("b"), F.col("eb").alias("c"))
     e3 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("c"))
-    # checkpoint-derived relations have no size stats, so these vocabulary-
-    # bounded joins would default to SortMergeJoin; the explicit broadcasts
-    # are of provably bounded (≤|brands|²-row) relations — the legitimate
-    # forced-broadcast class (a 1-row/vocab-sized build side), not the
-    # data-sized anti-pattern round 4 removed.
-    tri = e1.join(F.broadcast(e2), "b").join(F.broadcast(e3), ["a", "c"])
+    tri = e1.join(e2, "b").join(e3, ["a", "c"])
     deg = (
         edges.select(F.col("ea").alias("brand"))
         .unionAll(edges.select(F.col("eb").alias("brand")))
@@ -5508,7 +5503,7 @@ def brand_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ELSE 0 END AS BIGINT) / 10000.0D + 0.0D"
     )
     return (
-        deg.join(F.broadcast(per), "brand", "left")
+        deg.join(per, "brand", "left")
         .withColumn(
             "n_triangles", F.coalesce(F.col("n_triangles"), F.lit(0)).cast("bigint")
         )
@@ -5600,8 +5595,8 @@ def brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = (30_000_000_000 + 100 * nv) // (200 * nv)
     for _ in range(3):
         s = (
-            und.join(F.broadcast(r.withColumnRenamed("node", "u")), "u")
-            .join(F.broadcast(deg), "u")
+            und.join(r.withColumnRenamed("node", "u"), "u")
+            .join(deg, "u")
             .groupBy(F.col("v").alias("node"))
             .agg(F.sum(F.expr("r DIV d")).cast("bigint").alias("s"))
         )
@@ -5612,7 +5607,7 @@ def brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("r"),
         )
     return (
-        r.join(F.broadcast(deg.withColumnRenamed("u", "node")), "node")
+        r.join(deg.withColumnRenamed("u", "node"), "node")
         .select(
             F.col("node").alias("brand"),
             F.col("d").alias("degree"),
@@ -5676,7 +5671,7 @@ def revenue_pareto_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot_rel = cr.agg(F.sum("cents").alias("__tot"))
     cum = F.col("__cum")
     tot = F.col("__tot")
-    return ranked.crossJoin(F.broadcast(tot_rel)).select(
+    return ranked.crossJoin(tot_rel).select(
         "custkey",
         F.round(F.col("cents") / 100.0, 2).alias("revenue"),
         F.round(cum.cast("double") / tot, 4).alias("cum_share"),
@@ -5775,8 +5770,8 @@ def semantic_only_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     fa = fp.select(F.col("doc_id").alias("id_a"), F.col("fp").alias("fp_a"))
     fb = fp.select(F.col("doc_id").alias("id_b"), F.col("fp").alias("fp_b"))
     return (
-        pairs.join(F.broadcast(fa), "id_a")
-        .join(F.broadcast(fb), "id_b")
+        pairs.join(fa, "id_a")
+        .join(fb, "id_b")
         .where(F.col("fp_a") != F.col("fp_b"))
         .select("id_a", "id_b", "sim")
     )
@@ -5812,9 +5807,9 @@ def nation_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region")
     nr = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
+        .join(n, c["c_nationkey"] == n["n_nationkey"])
+        .join(r, n["n_regionkey"] == r["r_regionkey"])
         .groupBy(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             F.round(F.round(F.sum("o_totalprice"), 2) * 100)
@@ -6136,7 +6131,7 @@ def segment_priority_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     joint = (
-        o.join(F.broadcast(c), o["o_custkey"] == c["c_custkey"])
+        o.join(c, o["o_custkey"] == c["c_custkey"])
         .groupBy(
             F.col("c_mktsegment").alias("seg"),
             F.col("o_orderpriority").alias("prio"),
@@ -6185,8 +6180,9 @@ def order_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     [p05, p95] band — the robust-mean companion to the MAD outlier fence
     (report a mean a single fat-finger order cannot move).  Two passes of
     the same grouped shape: exact percentiles per group (tiny key), bounds
-    broadcast back onto the stream, clipped aggregate — the base table is
-    never shuffled, only its 3-row bounds relation moves."""
+    joined back onto the stream, clipped aggregate — the planner broadcasts
+    one side of the bounds join, so the base table is never shuffled for
+    it."""
     o = load_table(spark, sf_dir, "orders")
     b = o.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.expr("percentile(o_totalprice, 0.05)").alias("p05"),
@@ -6194,7 +6190,7 @@ def order_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clipped = F.least(F.greatest(F.col("o_totalprice"), F.col("p05")), F.col("p95"))
     return (
-        o.join(F.broadcast(b), o["o_orderstatus"] == b["status"])
+        o.join(b, o["o_orderstatus"] == b["status"])
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -6286,7 +6282,7 @@ def orders_pit_segment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     od = F.col("o_orderdate").cast("date")
     return (
         o.join(
-            F.broadcast(dim),
+            dim,
             (F.col("custkey") == F.col("o_custkey"))
             & (od >= F.col("valid_from"))
             & (od < F.col("valid_to")),
@@ -6410,7 +6406,7 @@ def customer_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        c.join(n, c["c_nationkey"] == n["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("group_size"))
         .withColumn("below_k", F.col("group_size") < 5)
@@ -6484,7 +6480,7 @@ def corpus_boilerplate_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).cast("bigint").alias("df"))
-        .crossJoin(F.broadcast(n))
+        .crossJoin(n)
         .select(
             "shingle",
             "df",
@@ -6528,8 +6524,8 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation")
     sr = (
-        li.join(F.broadcast(s), li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(n), s["s_nationkey"] == n["n_nationkey"])
+        li.join(s, li["l_suppkey"] == s["s_suppkey"])
+        .join(n, s["s_nationkey"] == n["n_nationkey"])
         .groupBy(F.col("n_name").alias("nation"), F.col("l_suppkey").alias("supp"))
         .agg(
             F.round(F.round(F.sum(_rev_dec()), 2) * 100)
@@ -6599,7 +6595,7 @@ def corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     c = t.withColumn("cum", F.sum("n_tokens").over(w))
     return (
-        c.crossJoin(F.broadcast(budget))
+        c.crossJoin(budget)
         .where(F.col("cum") <= F.col("b"))
         .groupBy("source")
         .agg(
@@ -6883,9 +6879,9 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
     )
     scored = (
-        tf.join(F.broadcast(qt), "term")
-        .join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
+        tf.join(qt, "term")
+        .join(df_, "term")
+        .crossJoin(stats)
         .groupBy("query_id", "doc_id")
         .agg(F.sum(contrib).alias("s"))
     )
@@ -7013,7 +7009,7 @@ def contamination_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = sh.where(F.col("doc_id") % 97 == 0).select("sh").distinct()
     return (
         sh.where(F.col("doc_id") % 97 != 0)
-        .join(F.broadcast(bench), "sh")
+        .join(bench, "sh")
         .select(
             "doc_id",
             "span_start",
@@ -7987,7 +7983,7 @@ def part_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.sum(_rev_dec()).alias("vdec"))
     tot = ps.agg(F.sum("vdec").cast("double").alias("total"))
     return (
-        ps.crossJoin(F.broadcast(tot))
+        ps.crossJoin(tot)
         .where(F.col("vdec").cast("double") > F.col("total") * 0.00007)
         .select(
             "suppkey",
@@ -8023,12 +8019,10 @@ def part_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
     return (
         li.join(
-            F.broadcast(
-                p.where(
-                    (~F.col("p_brand").like("Brand#1%"))
-                    & (F.col("p_size") >= 1)
-                    & (F.col("p_size") <= 25)
-                )
+            p.where(
+                (~F.col("p_brand").like("Brand#1%"))
+                & (F.col("p_size") >= 1)
+                & (F.col("p_size") <= 25)
             ),
             li["l_partkey"] == p["p_partkey"],
         )
@@ -8137,8 +8131,8 @@ def cross_source_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     va = vocab.select(F.col("source").alias("source_a"), F.col("n_sh").alias("na"))
     vb = vocab.select(F.col("source").alias("source_b"), F.col("n_sh").alias("nb"))
     return (
-        shared.join(F.broadcast(va), "source_a")
-        .join(F.broadcast(vb), "source_b")
+        shared.join(va, "source_a")
+        .join(vb, "source_b")
         .select(
             "source_a",
             "source_b",
@@ -8815,7 +8809,7 @@ def zorder_skipping_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         span("__min_dy", "__max_dy", F.lit(3)).cast("bigint").alias("dy_hi"),
     )
     return (
-        boxes.crossJoin(F.broadcast(slices))
+        boxes.crossJoin(slices)
         .groupBy("layout")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("files_total"),
@@ -9063,12 +9057,12 @@ def kmv_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = ev.select("d").distinct()
     day_sk = kmv.kmv_sketch(ev, "user_id", ["d"], k=_KMV_K, prefilter=True)
     # Each day sketch serves the 7 trailing windows it falls in; windows
-    # are restricted to days that exist (broadcast ~|days| rows).
+    # are restricted to days that exist (~|days| rows).
     fanned = (
         day_sk.withColumn(
             "target", F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)"))
         )
-        .join(F.broadcast(days.withColumnRenamed("d", "target")), "target", "left_semi")
+        .join(days.withColumnRenamed("d", "target"), "target", "left_semi")
         .select("target", "h")
     )
     merged = kmv.kmv_merge(fanned, ["target"], k=_KMV_K)
@@ -9080,7 +9074,7 @@ def kmv_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "target", F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)"))
         )
-        .join(F.broadcast(days.withColumnRenamed("d", "target")), "target", "left_semi")
+        .join(days.withColumnRenamed("d", "target"), "target", "left_semi")
         .groupBy("target")
         .agg(F.count_distinct("user_id").cast("bigint").alias("exact_users"))
     )
@@ -9468,7 +9462,7 @@ def orders_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("__target")
     )
     planned = compaction.plan_bins(
-        inv.join(F.broadcast(tgt), "part_year"),
+        inv.join(tgt, "part_year"),
         ["part_year"],
         file_col="file_id",
         size_col="size_bytes",
@@ -9514,7 +9508,7 @@ def customer_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("HIGH")
     )
     return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"])
+        c.join(n, c["c_nationkey"] == n["n_nationkey"])
         .groupBy(
             F.col("n_name").alias("nation"), F.col("c_mktsegment").alias("segment")
         )
@@ -9577,7 +9571,7 @@ def customer_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one data-sized map-side-combinable aggregate (band counts per
     group); everything after operates on bounded relations (groups ×
-    bands), with the global band histogram and the 1-row total broadcast."""
+    bands): the global band histogram and the 1-row total."""
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     band = (
@@ -9586,7 +9580,7 @@ def customer_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("c_acctbal") < 7000, "MID")
         .otherwise("HIGH")
     )
-    base = c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"]).select(
+    base = c.join(n, c["c_nationkey"] == n["n_nationkey"]).select(
         F.col("n_name").alias("nation"),
         F.col("c_mktsegment").alias("segment"),
         band.alias("band"),
@@ -9599,7 +9593,7 @@ def customer_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     glob = base.groupBy("band").agg(F.count(F.lit(1)).alias("cnt_v"))
     tot = base.agg(F.count(F.lit(1)).alias("n"))
-    spine = sizes.crossJoin(F.broadcast(glob))
+    spine = sizes.crossJoin(glob)
     j = spine.join(grp, ["nation", "segment", "band"], "left").withColumn(
         "cnt_g", F.coalesce(F.col("cnt_g"), F.lit(0))
     )
@@ -9609,7 +9603,7 @@ def customer_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.col("cnt_v").cast(dec) * F.col("size_g").cast(dec)
     )
     return (
-        j.crossJoin(F.broadcast(tot))
+        j.crossJoin(tot)
         .groupBy("nation", "segment")
         .agg(
             F.max("size_g").cast("bigint").alias("group_size"),
@@ -10145,7 +10139,7 @@ def qsketch_rolling_7d_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)")),
         )
         .join(
-            F.broadcast(days.withColumnRenamed("d", "target")),
+            days.withColumnRenamed("d", "target"),
             "target",
             "left_semi",
         )
@@ -10425,7 +10419,7 @@ def priority_sample_sumest(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.where(F.col("n_chars").isNotNull() & (F.col("n_chars") > 0))
         .agg(F.sum(F.col("n_chars").cast("bigint")).alias("true_total"))
     )
-    return est.crossJoin(F.broadcast(total))
+    return est.crossJoin(total)
 
 
 @query(
@@ -10906,7 +10900,8 @@ def lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing: write→append→probe ≡ inline banding of index ⋈ increment.
     The planted twins (signature-identical to their parent → all four bands
     collide) guarantee the result is non-empty at every SF.  Probe plan:
-    increment band keys broadcast, index scanned but never shuffled."""
+    the planner broadcasts the smaller of increment band keys and index
+    (both are small here), so neither side shuffles."""
     from oltp_to_data_warehouse_pipeline_spark.operators import lshindex
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -12,7 +12,8 @@ On the driver's TPC-H-ish fixtures the role mapping is (FIXTURES.md §A):
 Scale posture: dim builders are pure projections (narrow, no shuffle);
 the fact build's surrogate key uses ``xxhash64`` over the natural key
 (deterministic, partition-independent — safe on 1000 executors, unlike
-row_number over an unordered frame); star joins broadcast the dims.
+row_number over an unordered frame); the session's broadcast threshold
+broadcasts the dims in the star joins.
 """
 
 from __future__ import annotations
@@ -91,11 +92,13 @@ def star_join(
     region: DataFrame,
 ) -> DataFrame:
     """J1 — the reference's 3-way star join (`DB.sql:109-124`), widened to the
-    fixture's dim chain.  Dims are broadcast: the fact table never shuffles.
+    fixture's dim chain.  The dims sit under the session's broadcast
+    threshold, so the planner broadcasts them and the fact table never
+    shuffles (tests/test_warehouse.py pins the plan).
     """
     return (
-        fact.join(F.broadcast(customer), fact["customer_id"] == customer["customer_id"], "inner")
+        fact.join(customer, fact["customer_id"] == customer["customer_id"], "inner")
         .drop(customer["customer_id"])
-        .join(F.broadcast(nation), F.col("nation_id") == nation["n_nationkey"], "inner")
-        .join(F.broadcast(region), F.col("n_regionkey") == region["r_regionkey"], "inner")
+        .join(nation, F.col("nation_id") == nation["n_nationkey"], "inner")
+        .join(region, F.col("n_regionkey") == region["r_regionkey"], "inner")
     )

@@ -2,9 +2,19 @@
 
 The engine targets large clusters (100 TB inputs) but is tested on
 ``local[N]``.  All scale-relevant behavior is expressed via conf, not code:
-AQE does runtime partition coalescing / skew-join splitting, broadcast
-thresholds make the star joins broadcast-hash, and Arrow is enabled for the
-(rare) pandas exchanges used by the vectorized UDF escape hatch.
+AQE does runtime partition coalescing / skew-join splitting, and Arrow is
+enabled for the (rare) pandas exchanges used by the vectorized UDF escape
+hatch.
+
+This conf is the one place the join strategy is decided: Catalyst
+broadcasts a side estimated under ``autoBroadcastJoinThreshold`` and
+sort-merges otherwise, and AQE re-plans from real stage sizes at runtime
+(a sort-merge join whose shuffled side turns out small becomes a
+broadcast join).  A hint is left only where the planner cannot size a
+relation that is bounded by construction — an aggregate over a join is
+estimated at the join's product, and a driver-built ``createDataFrame``
+at ``Long.MaxValue`` — and carries a ``# bounded:`` note
+(tests/test_broadcast_hints.py).
 """
 
 from __future__ import annotations
@@ -33,8 +43,9 @@ _ENGINE_CONF: dict[str, str] = {
     # queries that regressed round-2->3 showed <6% difference — that
     # regression was bench sampling noise, not this floor.
     "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
-    # Dimension tables in the star schema are small; let Catalyst broadcast
-    # them instead of shuffling the fact table.
+    # The join-strategy decision (module docstring): a side estimated
+    # under 64 MiB broadcasts (the star schema's dimension tables), anything
+    # larger sort-merges until AQE sees its real size.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # NOT set (round-11 A/B, n=5 min-of-5 with control):
     # spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64m — the

@@ -192,12 +192,11 @@ def dedup_ingest_sink(
                 if prior is not None:
                     # drop re-deliveries: ids already admitted in an EARLIER
                     # batch (the probe's self-match exclusion would re-admit
-                    # an exact re-upload of an admitted doc).  Batch ids
-                    # broadcast; the index id column streams, no shuffle.
+                    # an exact re-upload of an admitted doc).
                     batch_ids = batch.select(F.col(id_col).alias("doc")).distinct()
                     known = (
                         prior.select("doc")
-                        .join(F.broadcast(batch_ids), "doc")
+                        .join(batch_ids, "doc")
                         .distinct()
                         .select(F.col("doc").alias(id_col))
                     )

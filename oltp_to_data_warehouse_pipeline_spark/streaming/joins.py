@@ -74,7 +74,8 @@ def static_enrich(
     bounded dimension table.
 
     The static side is re-planned per micro-batch (so a dimension refreshed
-    on disk is picked up without restarting the query) and broadcast —
+    on disk is picked up without restarting the query), and the planner
+    broadcasts it when its size is under the session threshold —
     stream-static joins keep NO state, unlike stream-stream: the stream
     side never waits for the dim, so this is the right tool whenever the
     dimension is slowly-changing and bounded.  ``how`` is left/inner (the
@@ -82,4 +83,4 @@ def static_enrich(
     """
     if how not in ("left", "inner"):
         raise ValueError("stream-static enrichment supports how='left'|'inner'")
-    return stream.join(F.broadcast(dim), on, how)
+    return stream.join(dim, on, how)

@@ -208,9 +208,8 @@ def test_intersect_safe_on_duplicate_hashes(spark):
 
 # ---------------------------------------------------------------------------
 # Bounded driver path (kmv_sketch_rows under operators.bounded's one row
-# bound) + broadcast-hint gate (bounded_groups): the checkpoint-pin job
-# floor replaced by bounded collects, with the distributed path as the
-# past-the-bound fallback.
+# bound): the checkpoint-pin job floor replaced by bounded collects, with
+# the distributed path as the past-the-bound fallback.
 # ---------------------------------------------------------------------------
 
 
@@ -280,26 +279,6 @@ def test_driver_path_bounds_the_rescue_collect(spark, monkeypatch):
     out = kmv.kmv_sketch(df, "v", ["g"], k=k)
     plain = kmv.kmv_sketch(df, "v", ["g"], k=k, prefilter=False)
     assert _nrows(out) == _nrows(plain)
-
-
-def test_unbounded_groups_gate_drops_broadcast_hints(spark):
-    """bounded_groups=False must leave the group-keyed audit joins to the
-    planner (round-11 verdict: a forced broadcast of one-row-per-group
-    relations is a driver OOM at high group cardinality).  With pinned
-    (stats-less) inputs the planner then sort-merges, which is the point;
-    the default keeps the round-11 broadcast shape."""
-    rows = [("a", v) for v in range(2000)] + [("b", v) for v in range(20)]
-    df = spark.createDataFrame(rows, "g string, v int")
-    hinted = kmv.kmv_sketch(df, "v", ["g"], k=4)._jdf.queryExecution().executedPlan().toString()
-    unhinted = kmv.kmv_sketch(
-        df, "v", ["g"], k=4, bounded_groups=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in hinted
-    assert "SortMergeJoin" in unhinted
-    # and the gate changes the PLAN, not the relation
-    assert _nrows(kmv.kmv_sketch(df, "v", ["g"], k=4, bounded_groups=False)) == _nrows(
-        kmv.kmv_sketch(df, "v", ["g"], k=4, prefilter=False)
-    )
 
 
 def test_cohort_overlap_query_paths_agree(spark, monkeypatch):

@@ -48,6 +48,12 @@ def test_prefilter_equals_plain(spark):
         d, "key", "val", ["mth"], k=64, prefilter=False
     )
     assert _rows(fast) == _rows(plain)
+    # one 3,000-key group beside a 10-key group, k far below the big one
+    rows = [("a", i, i * 2) for i in range(3000)] + [("b", i, i) for i in range(10)]
+    d = spark.createDataFrame(rows, "g string, key int, val int")
+    fast = qsketch.qsample_sketch(d, "key", "val", ["g"], k=4)
+    plain = qsketch.qsample_sketch(d, "key", "val", ["g"], k=4, prefilter=False)
+    assert _rows(fast) == _rows(plain)
 
 
 def test_quantiles_dkw_rank_error(spark):
@@ -110,8 +116,7 @@ def test_null_keys_excluded_prefilter_parity(spark):
 
 
 # ---------------------------------------------------------------------------
-# Bounded driver path (qsample_sketch_rows) + broadcast-hint gate (the
-# kmv twin).
+# Bounded driver path (qsample_sketch_rows), the kmv twin.
 # ---------------------------------------------------------------------------
 
 
@@ -180,22 +185,6 @@ def test_driver_path_bounds_the_rescue_collect(spark, monkeypatch):
     )
     out = qsketch.qsample_sketch(df, "key", "val", ["g"], k=k)
     assert _nrows(out) == _nrows(plain)
-
-
-def test_unbounded_groups_gate_drops_broadcast_hints(spark):
-    rows = [("a", i, i * 2) for i in range(3000)] + [("b", i, i) for i in range(10)]
-    df = spark.createDataFrame(rows, "g string, key int, val int")
-    hinted = qsketch.qsample_sketch(
-        df, "key", "val", ["g"], k=4
-    )._jdf.queryExecution().executedPlan().toString()
-    unhinted = qsketch.qsample_sketch(
-        df, "key", "val", ["g"], k=4, bounded_groups=False
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in hinted
-    assert "SortMergeJoin" in unhinted
-    assert _nrows(
-        qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, bounded_groups=False)
-    ) == _nrows(qsketch.qsample_sketch(df, "key", "val", ["g"], k=4, prefilter=False))
 
 
 def test_price_quantiles_query_paths_agree(spark, monkeypatch):
