@@ -47,6 +47,19 @@ def recorded_fingerprint(plans_md: Path | None = None) -> str | None:
     return m.group(1) if m else None
 
 
+def plan_operators(plan: str) -> str:
+    """Each operator of a ``formatted`` explain once, one name a line.
+
+    ``formatted`` draws the main tree and each subquery's tree, then lists
+    every operator again under a numbered ``(n) Name`` details header.
+    Counting names over the whole text counts each operator twice;
+    counting over the main tree misses the subqueries, and counting over
+    every drawn tree counts a subquery twice when two operators host it
+    (a filter and the scan it is pushed into).  The details headers name
+    each operator id exactly once."""
+    return "\n".join(dict(re.findall(r"^\((\d+)\) (.+)$", plan, re.M)).values())
+
+
 def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
     from oltp_to_data_warehouse_pipeline_spark.plans.queryset import registry
     from oltp_to_data_warehouse_pipeline_spark.session import get_spark
@@ -77,29 +90,26 @@ def audit(sf_dir: str = "/root/testdata/sf0.001") -> str:
         except Exception as e:  # noqa: BLE001 - audit must cover every query
             lines.append(f"| {name} | — | — | — | — | — | — | ERROR: {e} |")
             continue
-        # ``formatted`` lists every operator twice: once in the tree, once
-        # in the numbered details after the first blank line.  Count
-        # operators over the tree only; PushedFilters lives in the details.
-        tree = plan.split("\n\n", 1)[0]
+        ops = plan_operators(plan)
         pushed = sorted(
             set(re.findall(r"PushedFilters: \[([^\]]+)\]", plan)) - {""}
         )
         pushed_s = "yes" if pushed else "—"
         notes = []
-        if "CartesianProduct" in tree:
+        if "CartesianProduct" in ops:
             notes.append("CARTESIAN")
-        if "mapInPandas" in tree or "MapInPandas" in tree:
+        if "mapInPandas" in ops or "MapInPandas" in ops:
             notes.append("arrow-batch python")
-        if "LocalTableScan" in tree:
+        if "LocalTableScan" in ops:
             notes.append("local")
         lines.append(
             "| {} | {} | {} | {} | {} | {} | {} | {} |".format(
                 name,
-                tree.count("BroadcastHashJoin"),
-                tree.count("SortMergeJoin"),
-                tree.count("ShuffledHashJoin"),
-                tree.count("BroadcastNestedLoopJoin"),
-                tree.count("Exchange"),
+                ops.count("BroadcastHashJoin"),
+                ops.count("SortMergeJoin"),
+                ops.count("ShuffledHashJoin"),
+                ops.count("BroadcastNestedLoopJoin"),
+                ops.count("Exchange"),
                 pushed_s,
                 " ".join(notes),
             )
