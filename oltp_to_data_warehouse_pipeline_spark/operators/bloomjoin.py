@@ -63,12 +63,13 @@ def bloom_semi_join(
     bit-identical to ``probe.join(build, key, "semi")`` (the coarse phase
     admits false positives only, and the exact phase removes them).
 
-    Every join strategy here is the planner's.  A bit relation holds at
-    most ``num_bits`` rows, so it broadcasts under the session threshold
-    (or, when its estimate inherits a large build's size, AQE switches it
-    to a broadcast once the bit stage has run).  The exact verify
-    broadcasts only when the build keys are small; the large build sides
-    this operator exists for sort-merge.
+    The bit relations are broadcast by hint: each holds at most
+    ``num_bits`` rows, but the planner sizes a ``distinct`` over the build
+    by the build itself, so a build too big to auto-broadcast would turn
+    every coarse prune into a sort-merge join that shuffles the whole
+    probe side.  The exact verify is the planner's: it broadcasts only
+    when the build keys are small; the large build sides this operator
+    exists for sort-merge.
 
     The build side is scanned ``num_hashes + 1`` times (once per bit
     relation + once for the exact keys) — the same re-scan Spark's own
@@ -98,7 +99,8 @@ def bloom_semi_join(
         ).distinct()
         pruned = (
             pruned.withColumn("__bf_probe", bloom_bit(F.col(probe_key), h, num_bits))
-            .join(bits_h, F.col("__bf_probe") == F.col("__bf_bit"), "semi")
+            # bounded: ≤ num_bits rows
+            .join(F.broadcast(bits_h), F.col("__bf_probe") == F.col("__bf_bit"), "semi")
             .drop("__bf_probe")
         )
 
@@ -127,7 +129,8 @@ def coarse_survivor_stats(
         hit_h = F.col("__bf_bit").isNotNull().cast("int")
         marked = (
             marked.withColumn("__p", bloom_bit(F.col("k"), h, num_bits))
-            .join(bits_h, F.col("__p") == F.col("__bf_bit"), "left")
+            # bounded: ≤ num_bits rows
+            .join(F.broadcast(bits_h), F.col("__p") == F.col("__bf_bit"), "left")
             .withColumn(f"__hit{h}", hit_h)
             .drop("__p", "__bf_bit")
         )

@@ -135,7 +135,8 @@ def kmv_sketch_rows(
     if trows:
         lt = spark.createDataFrame(trows, active.schema)
         survivors = (
-            _ns_join(raw, lt, group_cols, "left")
+            # bounded: ≤ DRIVER_MAX_ROWS rows, built on the driver
+            _ns_join(raw, F.broadcast(lt), group_cols, "left")
             .where(F.col("h") < F.coalesce(F.col("__t"), F.lit(HASH_SPACE)))
             .select(*group_cols, "h")
             .distinct()
@@ -158,7 +159,8 @@ def kmv_sketch_rows(
         )
         w = Window.partitionBy(*group_cols).orderBy("h")
         resc = collect_bounded(
-            _ns_join(raw, la, group_cols, "left_semi")
+            # bounded: ≤ DRIVER_MAX_ROWS rows, built on the driver
+            _ns_join(raw, F.broadcast(la), group_cols, "left_semi")
             .select(*group_cols, "h")
             .distinct()
             .withColumn("__r", F.row_number().over(w))

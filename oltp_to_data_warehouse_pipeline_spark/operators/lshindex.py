@@ -11,16 +11,18 @@ count), so writers, appenders and probers can never disagree about key
 geometry.
 
 Probe plan (the part that must be right at scale): the INCREMENT's band
-keys are computed inline and joined to the index with no hint; while the
-increment sits under the session's broadcast threshold the planner
-broadcasts it, and the candidate join streams the INDEX past the
+keys are computed inline and explicitly ``broadcast()`` — the planner
+cannot be left to size them, since an increment built with
+``createDataFrame`` (or any RDD-backed relation) is estimated at
+``Long.MaxValue`` and would never auto-broadcast.  The candidate join
+then streams the INDEX past the
 broadcast build — the historical index is scanned (two columns, band+key
 pushed through parquet column pruning) but NEVER shuffled, so probe cost
 is one index scan + a broadcast hash join sized by the increment,
-independent of how the index is partitioned on disk.  An increment past
-the threshold sort-merges instead of forcing a broadcast; at that point
-the "increment" is a corpus and the inline self-join path is the right
-tool.
+independent of how the index is partitioned on disk.  A shuffle-side
+alternative (co-bucketed tables) only pays when increments outgrow
+broadcast size — at that point the "increment" is a corpus and the
+inline self-join path is the right tool.
 
 Verification: `probe_verified` joins the candidate pairs back to both
 texts and computes EXACT shingle Jaccard (array_intersect over the
@@ -173,7 +175,8 @@ def lsh_probe(
     before_batch_id: int | None = None,
 ) -> DataFrame:
     """Candidate pairs ``(probe_id, index_id)`` between the increment and
-    the indexed corpus: increment band keys broadcast, index streamed.
+    the indexed corpus: increment band keys broadcast (by hint — see the
+    module docstring), index streamed and never shuffled.
     Self-matches (a probe doc already present in the index under the same
     id) are excluded; ordering is NOT imposed between the sides — probe_id
     is always the increment's id.
@@ -189,9 +192,8 @@ def lsh_probe(
     column, so it prunes statically.
 
     Takedown tombstones (operators/batchstore.py), when present under the
-    index path, are anti-joined broadcast-side — a removed document stops
-    matching immediately, before compaction physically excises its band
-    rows."""
+    index path, are anti-joined — a removed document stops matching
+    immediately, before compaction physically excises its band rows."""
     from oltp_to_data_warehouse_pipeline_spark.operators import batchstore
 
     spark = new_docs.sparkSession
@@ -215,7 +217,8 @@ def lsh_probe(
     index = batchstore.apply_tombstones(index, spark, path, "doc")
     index = index.select(F.col("doc").alias("index_id"), "band", "key")
     return (
-        index.join(probe, ["band", "key"])
+        # bounded: increment docs × bands rows
+        index.join(F.broadcast(probe), ["band", "key"])
         .where(F.col("probe_id") != F.col("index_id"))
         .select("probe_id", "index_id")
         .distinct()
@@ -237,12 +240,17 @@ def lsh_probe_verified(
     band keys only — at 100 TB the texts live in the lakehouse table the
     index was built from).
 
-    Cost shape: the candidate relation (increment-sized) is BROADCAST and
-    the corpus streams past it, so the corpus is scanned but never
-    shuffled, and shingle computation happens AFTER the join — only
-    matched corpus documents are ever shingled (round-11 review: a
-    pre-join shingle projection re-tokenized the whole corpus per probe).
-    The text-column scan itself is the remaining O(corpus) term; a
+    Cost shape: the candidate relation (increment-sized) is BROADCAST by
+    hint and the corpus streams past it, so the corpus is scanned but never
+    shuffled.  The hint is needed because the candidates are a
+    ``distinct`` over the index join, which the planner sizes at the
+    join's product and so would never broadcast; without it a corpus over
+    the session threshold is sort-merged, and every ingest micro-batch
+    would shuffle the whole corpus text.  Shingle computation happens
+    AFTER the join — only matched corpus documents are ever shingled
+    (round-11 review: a pre-join shingle projection re-tokenized the
+    whole corpus per probe).  The text-column scan itself is the
+    remaining O(corpus) term; a
     lakehouse deployment prunes it further by sorting/bucketing the
     corpus table on the id so the candidate ids push down."""
     spark = new_docs.sparkSession
@@ -260,7 +268,8 @@ def lsh_probe_verified(
     inter = F.size(F.array_intersect("__psh", "__csh"))
     union = F.size("__psh") + F.size("__csh") - inter
     return (
-        c_txt.join(build, "index_id")
+        # bounded: candidate pairs ⊆ increment × matches
+        c_txt.join(F.broadcast(build), "index_id")
         # shingle columns projected AFTER the join — computed once per
         # matched row, never for unmatched corpus rows
         .withColumn("__psh", word_shingles(F.col("__ptext"), n))

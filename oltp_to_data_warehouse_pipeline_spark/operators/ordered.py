@@ -123,7 +123,8 @@ def global_order_stats(
     # it sorts first, matching the window form's NULLS FIRST), and a plain
     # equi-join would silently drop those rows
     out = local.alias("__l").join(
-        off.alias("__o"),
+        # bounded: ≤ n_bands + 1 rows (one per band)
+        F.broadcast(off).alias("__o"),
         F.col("__l.__band").eqNullSafe(F.col("__o.__band")),
     ).select("__l.*", *[F.col(f"__o.{c}") for c in off.columns if c != "__band"])
     out = out.withColumn(rank_col, (F.col("__off_n") + F.col("__ln")).cast("bigint"))

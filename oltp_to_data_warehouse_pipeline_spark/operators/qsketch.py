@@ -132,7 +132,8 @@ def qsample_sketch_rows(
     if trows:
         lt = spark.createDataFrame(trows, active.schema)
         survivors = (
-            _ns_join(raw, lt, group_cols, "left")
+            # bounded: ≤ DRIVER_MAX_ROWS rows, built on the driver
+            _ns_join(raw, F.broadcast(lt), group_cols, "left")
             .where(F.col("h") < F.coalesce(F.col("__t"), F.lit(HASH_SPACE)))
             .select(*group_cols, "h", "v")
         )
@@ -162,7 +163,8 @@ def qsample_sketch_rows(
         la = spark.createDataFrame(audit, active.select(*group_cols).schema)
         resc = collect_bounded(
             _bottom_k(
-                _ns_join(raw, la, group_cols, "left_semi").select(
+                # bounded: ≤ DRIVER_MAX_ROWS rows, built on the driver
+                _ns_join(raw, F.broadcast(la), group_cols, "left_semi").select(
                     *group_cols, "h", "v"
                 ),
                 group_cols,

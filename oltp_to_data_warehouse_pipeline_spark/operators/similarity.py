@@ -433,7 +433,8 @@ def cosine_near_dup_lsh(
         F.col(id_col).alias("id"), F.posexplode(vec).alias("pos", "x")
     )
     dots = (
-        sv.join(pw, "pos")
+        # bounded: planes × dims rows, built on the driver
+        sv.join(F.broadcast(pw), "pos")
         .groupBy("id", "plane")
         .agg(F.sum(F.col("x") * F.col("w")).alias("d"))
     )

@@ -9,7 +9,7 @@ sketch replaces it with three bounded pieces:
    sketch row, same engine-portable fold as ``operators.bloomjoin``);
    ``groupBy(j, cell)`` with map-side combine shuffles at most
    ``width × depth`` counter rows no matter how many keys exist.
-2. **Candidate filter** — the counter table broadcasts (~100 KB) and each
+2. **Candidate filter** — the counter table broadcasts (~100 KB, by hint) and each
    probe row computes its estimate scan-side: ``min_j counter[h_j(key)]``.
    CMS never undercounts, so ``estimate ≥ T`` admits every true heavy
    hitter (false negatives impossible) plus hash-collision false
@@ -78,14 +78,19 @@ def _with_estimate(
     sf0.1, min-of-7: 1.23 s → 1.08 s; at 100 TB the two saved passes are
     the dominant cost).  The pin is bounded by the sketch size (≤
     width×depth rows), the same sanctioned-barrier rationale as
-    brand_affinity_lift's vocabulary aggregate."""
+    brand_affinity_lift's vocabulary aggregate.
+
+    The lookups are broadcast by hint: a pinned aggregate keeps the
+    data-sized estimate of the plan it came from, so the planner alone
+    would sort-merge each slice against the data at scale."""
     out = df
     for j in range(depth):
         cj = counters.where(F.col("j") == j).select(
             F.col("cell").alias(f"__cell{j}"), F.col("c").alias(f"__c{j}")
         )
         out = out.withColumn(f"__probe{j}", cms_cell(F.col(key), j, width)).join(
-            cj, F.col(f"__probe{j}") == F.col(f"__cell{j}"), "left"
+            # bounded: ≤ width rows (one sketch row of the width×depth counters)
+            F.broadcast(cj), F.col(f"__probe{j}") == F.col(f"__cell{j}"), "left"
         )
     est = F.least(*[F.coalesce(F.col(f"__c{j}"), F.lit(0)) for j in range(depth)])
     drop = [c for j in range(depth) for c in (f"__probe{j}", f"__cell{j}", f"__c{j}")]

@@ -5112,12 +5112,14 @@ def event_value_outliers_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event table is never shuffled."""
     e = load_table(spark, sf_dir, "events").select("event_type", "value")
     med = e.groupBy("event_type").agg(F.median("value").alias("med"))
-    dev = e.join(med, "event_type").withColumn(
+    # bounded: one row per event_type (a fixed five-value vocabulary)
+    dev = e.join(F.broadcast(med), "event_type").withColumn(
         "dev", F.abs(F.col("value") - F.col("med"))
     )
     mad = dev.groupBy("event_type").agg(F.median("dev").alias("mad"))
     return (
-        dev.join(mad, "event_type")
+        # bounded: one row per event_type
+        dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type", "med", "mad")
         .agg(
             F.count_if(F.col("dev") > 3 * 1.4826 * F.col("mad"))
@@ -6180,9 +6182,9 @@ def order_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     [p05, p95] band — the robust-mean companion to the MAD outlier fence
     (report a mean a single fat-finger order cannot move).  Two passes of
     the same grouped shape: exact percentiles per group (tiny key), bounds
-    joined back onto the stream, clipped aggregate — the planner broadcasts
-    one side of the bounds join, so the base table is never shuffled for
-    it."""
+    broadcast back onto the stream, clipped aggregate — the base table is
+    never shuffled, only its 3-row bounds relation moves.  The broadcast is
+    a hint: the planner sizes the bounds by the orders scan they aggregate."""
     o = load_table(spark, sf_dir, "orders")
     b = o.groupBy(F.col("o_orderstatus").alias("status")).agg(
         F.expr("percentile(o_totalprice, 0.05)").alias("p05"),
@@ -6190,7 +6192,8 @@ def order_value_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clipped = F.least(F.greatest(F.col("o_totalprice"), F.col("p05")), F.col("p95"))
     return (
-        o.join(b, o["o_orderstatus"] == b["status"])
+        # bounded: one row per o_orderstatus (F, O, P)
+        o.join(F.broadcast(b), o["o_orderstatus"] == b["status"])
         .groupBy("status")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -6879,8 +6882,10 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl"))
     )
     scored = (
-        tf.join(qt, "term")
-        .join(df_, "term")
+        # bounded: literal query terms, built on the driver
+        tf.join(F.broadcast(qt), "term")
+        # bounded: one row per literal query term
+        .join(F.broadcast(df_), "term")
         .crossJoin(stats)
         .groupBy("query_id", "doc_id")
         .agg(F.sum(contrib).alias("s"))
@@ -9057,12 +9062,13 @@ def kmv_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     days = ev.select("d").distinct()
     day_sk = kmv.kmv_sketch(ev, "user_id", ["d"], k=_KMV_K, prefilter=True)
     # Each day sketch serves the 7 trailing windows it falls in; windows
-    # are restricted to days that exist (~|days| rows).
+    # are restricted to days that exist (broadcast ~|days| rows).
     fanned = (
         day_sk.withColumn(
             "target", F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)"))
         )
-        .join(days.withColumnRenamed("d", "target"), "target", "left_semi")
+        # bounded: one row per calendar day
+        .join(F.broadcast(days.withColumnRenamed("d", "target")), "target", "left_semi")
         .select("target", "h")
     )
     merged = kmv.kmv_merge(fanned, ["target"], k=_KMV_K)
@@ -9074,7 +9080,8 @@ def kmv_rolling_7d_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "target", F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)"))
         )
-        .join(days.withColumnRenamed("d", "target"), "target", "left_semi")
+        # bounded: one row per calendar day
+        .join(F.broadcast(days.withColumnRenamed("d", "target")), "target", "left_semi")
         .groupBy("target")
         .agg(F.count_distinct("user_id").cast("bigint").alias("exact_users"))
     )
@@ -10139,7 +10146,8 @@ def qsketch_rolling_7d_price(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.expr("sequence(d, date_add(d, 6), interval 1 day)")),
         )
         .join(
-            days.withColumnRenamed("d", "target"),
+            # bounded: one row per calendar day
+            F.broadcast(days.withColumnRenamed("d", "target")),
             "target",
             "left_semi",
         )
@@ -10900,8 +10908,7 @@ def lsh_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing: write→append→probe ≡ inline banding of index ⋈ increment.
     The planted twins (signature-identical to their parent → all four bands
     collide) guarantee the result is non-empty at every SF.  Probe plan:
-    the planner broadcasts the smaller of increment band keys and index
-    (both are small here), so neither side shuffles."""
+    increment band keys broadcast, index scanned but never shuffled."""
     from oltp_to_data_warehouse_pipeline_spark.operators import lshindex
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")

@@ -10,11 +10,16 @@ This conf is the one place the join strategy is decided: Catalyst
 broadcasts a side estimated under ``autoBroadcastJoinThreshold`` and
 sort-merges otherwise, and AQE re-plans from real stage sizes at runtime
 (a sort-merge join whose shuffled side turns out small becomes a
-broadcast join).  A hint is left only where the planner cannot size a
-relation that is bounded by construction — an aggregate over a join is
-estimated at the join's product, and a driver-built ``createDataFrame``
-at ``Long.MaxValue`` — and carries a ``# bounded:`` note
-(tests/test_broadcast_hints.py).
+broadcast join, though a data-sized side that sits in a leaf stage has
+already been shuffled by then).  A hint is left only where the planner
+cannot size a relation that is bounded by construction, and carries a
+``# bounded:`` note (tests/test_broadcast_hints.py).  The planner
+misjudges three kinds: an aggregate over a join is estimated at the
+join's product; a driver-built ``createDataFrame`` at ``Long.MaxValue``;
+and a relation bounded by a constant but derived from the data (a
+``distinct`` of bloom bits, one row per day or status) at the size of the
+data it reads, so it broadcasts on small inputs and not past the
+threshold.
 """
 
 from __future__ import annotations

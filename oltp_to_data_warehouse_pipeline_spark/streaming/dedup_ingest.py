@@ -192,11 +192,13 @@ def dedup_ingest_sink(
                 if prior is not None:
                     # drop re-deliveries: ids already admitted in an EARLIER
                     # batch (the probe's self-match exclusion would re-admit
-                    # an exact re-upload of an admitted doc).
+                    # an exact re-upload of an admitted doc).  Batch ids
+                    # broadcast; the index id column streams, no shuffle.
                     batch_ids = batch.select(F.col(id_col).alias("doc")).distinct()
                     known = (
                         prior.select("doc")
-                        .join(batch_ids, "doc")
+                        # bounded: ≤ micro-batch rows
+                        .join(F.broadcast(batch_ids), "doc")
                         .distinct()
                         .select(F.col("doc").alias(id_col))
                     )

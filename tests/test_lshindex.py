@@ -101,13 +101,33 @@ def test_probe_verified_matches_exact_jaccard(spark, tmp_path):
         assert j >= 0.5
 
 
-def test_probe_plan_broadcasts_increment_never_shuffles_index(spark, tmp_path):
+def test_probe_plan_broadcasts_increment_never_shuffles_index(
+    spark, tmp_path, no_auto_broadcast
+):
+    """With size-based broadcasting off (an index past the threshold, or an
+    increment the planner cannot size), the increment is still the
+    broadcast side and the index streams."""
     corpus, inc = _split(spark)
     path = str(tmp_path / "lsh")
     lshindex.lsh_write_index(corpus, path)
     plan = lshindex.lsh_probe(inc, path)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_verified_probe_never_shuffles_index_or_corpus(
+    spark, tmp_path, no_auto_broadcast
+):
+    """The verify join broadcasts the candidate pairs and streams the corpus
+    text: per-probe cost follows the increment, not the corpus."""
+    corpus, inc = _split(spark)
+    path = str(tmp_path / "lsh")
+    lshindex.lsh_write_index(corpus, path)
+    df = lshindex.lsh_probe_verified(inc, path, corpus)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("BroadcastHashJoin") == 2
+    assert "hashpartitioning(band" not in plan, "index shuffled"
+    assert "hashpartitioning(index_id" not in plan, "corpus shuffled"
 
 
 def test_model_file_pins_geometry(spark, tmp_path):
